@@ -82,8 +82,8 @@ HEADLINE = [
 #: BENCH_r05 per-query) but their physical plans are fingerprinted every
 #: bench run, so a plan regression in them raises a PLANS.json diff
 #: instead of surfacing only as a correctness failure. Decade rows for
-#: these live in SCALING.md's extras table (tools/scale_decade_full.py
-#: --only ...).
+#: these live in SCALING.md's extras table (tools/measure.py --queries
+#: ... --inflate 10).
 PINNED_EXTRAS = [
     "text_gopher",
     "text_perplexity",

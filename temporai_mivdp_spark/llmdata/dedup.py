@@ -204,11 +204,11 @@ def _posting_pairs_streamed(
     rows while materializing per-key array buffers: the repo's own
     worst 100x cell (SCALING.md r11/r12). The sort this plan pays
     instead is a Tungsten radix sort over fixed-width rows, and the
-    pair emit streams out of it. Measured (tools/exp_jaccard_posting.py,
-    interleaved min-of-R, identical pair output asserted): sf0.1
-    2.305 -> 1.955 s; 30x inflation 60.6 -> 23.2 s (2.6x); the
-    materialize+self-join alternative ties at 30x but loses at sf0.1
-    (3.669) and needs a per-run scratch write. This is the engine's one
+    pair emit streams out of it. Measured (exp_jaccard_posting.py at
+    commit 64a744e, interleaved min-of-R, identical pair output
+    asserted): sf0.1 2.305 -> 1.955 s; 30x inflation 60.6 -> 23.2 s
+    (2.6x); the materialize+self-join alternative ties at 30x but loses
+    at sf0.1 (3.669) and needs a per-run scratch write. This is the engine's one
     Arrow boundary outside the multimodal family — guide §4.2's
     sanctioned shape (whole batches to vectorized numpy, constructed
     once per task, ~20 bytes/row across the boundary), not a row-wise
@@ -422,7 +422,8 @@ def ngram_jaccard_pairs(
     # shuffles. Round 12 removed the aggregation outright (guide §1.2:
     # fix the distributed algorithm first); a groupBy(id, shingle)
     # dedup + count-window variant was also measured and rejected
-    # (tools/exp_jaccard_setsize.py: +12% at 30x vs collect_set).
+    # (exp_jaccard_setsize.py at commit 64a744e: +12% at 30x vs
+    # collect_set).
     # Contract: id_col uniquely identifies documents (see
     # _hashed_shingle_sets — duplicate ids previously got their sets
     # unioned across rows; every caller in this repo dedups by a key).
@@ -461,7 +462,8 @@ def ngram_jaccard_pairs(
     #   instantiates the whole scan->shingle->set subtree twice;
     #   rejected (r11). Re-tried in r13 over a per-run materialized
     #   (id, sz, shingle) parquet: 3.669s at sf0.1, ties the streamed
-    #   emit at 30x — rejected (tools/exp_jaccard_posting.py variant B).
+    #   emit at 30x — rejected (variant B of exp_jaccard_posting.py
+    #   at commit 64a744e).
     # * posting collect_list + posexplode/slice emit (shipped r5-r12) —
     #   2.305s at sf0.1, 60.6s at 30x (this session's interleaved A/B).
     # * sorted-run streamed emit (shipped r13) — 1.955s at sf0.1,

@@ -153,8 +153,8 @@ _WINSORIZE_SMALL_N = 4096
 #: Inputs at or below this many non-null rows take the round-11 window
 #: plan (one sort into #groups partitions) instead of the two-pass
 #: selection. Round-12 measured the crossover on the 32-split synthetic
-#: lineitem (tools/exp_a8_selection_ab.py, interleaved min-of-5,
-#: hash-identical results): 600k rows window 0.910 / selection 0.971;
+#: lineitem (exp_a8_selection_ab.py at commit 64a744e, interleaved
+#: min-of-5, hash-identical results): 600k rows window 0.910 / selection 0.971;
 #: 6M rows 6.98 / 7.47; 18M rows 16.04 / 8.42; 60M rows 78.09 / 13.72.
 #: The gate sits at the measured parity point — below it the sort
 #: provably wins (the selection plan's fixed two-aggregate tax costs
@@ -234,6 +234,13 @@ def _exact_bounds_by_window(
             + (F.col("__hi_vh") - F.col("__hi_vl")) * F.col("__hi_frac")
         ).alias("__hi"),
     )
+
+
+def _selection_small_n(accuracy: int) -> int:
+    """Largest group size the selection tier collects whole at
+    ``accuracy``: above it ``15n/accuracy >= 6``, the bracket margin
+    ``_exact_bounds_by_selection``'s docstring relies on."""
+    return max(_WINSORIZE_SMALL_N, 2 * accuracy // 5)
 
 
 def _exact_bounds_by_selection(
@@ -398,8 +405,8 @@ def winsorize(
       (``_adaptive_accuracy``) so the pass-2 candidate buffer is
       absolutely bounded, and the small-group threshold derived from
       that accuracy so the bracket guarantee always covers the target
-      ranks (accuracy/5 + 1; the guarantee needs 15n/accuracy >= ~3
-      ranks of slack).
+      ranks (``_selection_small_n``: 2*accuracy/5, where the guarantee's
+      15n/accuracy reaches 6 ranks of slack).
 
     History: ``F.percentile`` was rejected in round 4 (~4x slower — a
     TypedImperativeAggregate whose partial buffers hold EVERY value,
@@ -443,7 +450,7 @@ def winsorize(
                 lower_pct / 100.0,
                 upper_pct / 100.0,
                 accuracy=accuracy,
-                small_n=max(_WINSORIZE_SMALL_N, accuracy // 5 + 1),
+                small_n=_selection_small_n(accuracy),
             )
     else:
         bounds = df.groupBy(*keys).agg(

@@ -980,8 +980,8 @@ def stream_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     deployment picks a real horizon and gets state bounded to keys
     younger than watermark + bucket (dropDuplicatesWithinWatermark
     evicts older state — plain dropDuplicates would grow forever;
-    eviction is measured in tools/scale_stateful.py's state-bound
-    sweeps).
+    eviction is measured by the state-bound sweeps of
+    ``scale_stateful.py`` at commit 64a744e).
     """
     from temporai_mivdp_spark import streaming as st_mod
 

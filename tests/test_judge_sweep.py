@@ -15,12 +15,19 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
 
-from judge_sweep import stage_copycheck, stage_leakcheck  # noqa: E402
+from judge_sweep import ENV_ALLOW_RE, stage_copycheck, stage_leakcheck  # noqa: E402
 
 
 def test_leakcheck_green():
     result = stage_leakcheck()
     assert result["green"], result["hits"]
+
+
+def test_env_allowlist_has_no_bare_tool_knobs():
+    # tools take their knobs as command-line options; a bare env name
+    # such as REPS would let a script's behavior drift with the shell
+    assert ENV_ALLOW_RE.match("SPARK_GRAFT_CPUS")
+    assert not ENV_ALLOW_RE.match("REPS")
 
 
 def test_copycheck_green():

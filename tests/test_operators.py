@@ -145,7 +145,7 @@ def test_winsorize_size_gate_tiers_are_result_identical(spark):
     smooth/tie/small corpus identically (the property the gate's
     transparency rests on) and that the adaptive-accuracy derivation is
     monotone, capped, and keeps the bracket-guarantee coupling
-    small_n >= accuracy/5 + 1 (ADVICE r12: a caller-raised accuracy
+    small_n >= 2*accuracy/5 (ADVICE r12: a caller-raised accuracy
     without a raised small_n could leave groups whose brackets may not
     cover the target ranks)."""
     import numpy as np
@@ -154,6 +154,9 @@ def test_winsorize_size_gate_tiers_are_result_identical(spark):
         _WINSORIZE_ACCURACY,
         _WINSORIZE_ACCURACY_CAP,
         _adaptive_accuracy,
+        _exact_bounds_by_selection,
+        _exact_bounds_by_window,
+        _selection_small_n,
     )
 
     rng = np.random.RandomState(11)
@@ -175,6 +178,21 @@ def test_winsorize_size_gate_tiers_are_result_identical(spark):
     assert _adaptive_accuracy(300_000_000) == 10_000
     assert _adaptive_accuracy(900_000_000) == 30_000
     assert _adaptive_accuracy(10**13) == _WINSORIZE_ACCURACY_CAP
+
+    # the thinnest bracket margin the gate can produce: accuracy at its
+    # cap, one group just above small_n (15n/accuracy = 6 ranks), all
+    # values distinct so no tie run can hide a bracket miss
+    small_n = _selection_small_n(_WINSORIZE_ACCURACY_CAP)
+    assert small_n == 2 * _WINSORIZE_ACCURACY_CAP // 5
+    n = small_n + 1
+    edge = spark.range(n).select(
+        F.lit("g").alias("g"), ((F.col("id") * 7919) % n).cast("double").alias("__v")
+    )
+    by_window = _exact_bounds_by_window(edge, ["g"], 0.1, 0.9).collect()
+    by_selection = _exact_bounds_by_selection(
+        edge, ["g"], 0.1, 0.9, accuracy=_WINSORIZE_ACCURACY_CAP, small_n=small_n
+    ).collect()
+    assert by_window == by_selection
 
 
 def test_two_level_agg(spark):

@@ -7,11 +7,20 @@ changed fingerprint = the commit that changed the plan is accountable).
 Regenerate after operator changes:
 
     python tools/explain_all.py
+
+With ``--formatted DIR`` it instead writes ``.explain("formatted")`` of
+each named catalog query to ``DIR/<name>.txt`` (planning only, nothing
+executes) — before/after plan evidence for a change:
+
+    python tools/explain_all.py --formatted DIR [--sf SF_DIR] [--cores N]
+        dedup_ngram_jaccard text_langid ...
 """
 
 from __future__ import annotations
 
+import argparse
 import json
+import os
 import sys
 
 sys.path.insert(0, ".")
@@ -30,14 +39,37 @@ SF = "/root/testdata/sf0.001"
 BENCH_SF = "/root/testdata/sf0.1"
 
 
+def write_formatted(spark, out_dir: str, sf_dir: str, names: list[str]) -> None:
+    qs = entrymod.queries()
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        df = qs[name](spark, sf_dir)
+        text = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+        path = os.path.join(out_dir, f"{name}.txt")
+        with open(path, "w") as f:
+            f.write(text)
+        print(f"wrote {path}")
+
+
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--formatted", metavar="DIR",
+                    help="write each named query's formatted plan to DIR")
+    ap.add_argument("--sf", default=BENCH_SF, help="input of --formatted")
+    ap.add_argument("--cores", type=int, default=32, help="local[N] session")
+    ap.add_argument("names", nargs="*", help="catalog queries for --formatted")
+    args = ap.parse_args()
+    if bool(args.formatted) != bool(args.names):
+        ap.error("--formatted DIR and query names go together")
     # Session mirrors bench.py exactly — plans can depend on parallelism
     # (e.g. the Arrow top-k repartitions by defaultParallelism), so the
     # reference fingerprints must come from the same master/partitions.
     spark = get_session(
         app_name="mivdp-explain",
-        master="local[32]",
-        shuffle_partitions=32,
+        master=f"local[{args.cores}]",
+        shuffle_partitions=args.cores,
         extra_conf={
             "spark.ui.enabled": "false",
             "spark.ui.showConsoleProgress": "false",
@@ -48,6 +80,10 @@ def main() -> None:
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
+    if args.formatted:
+        write_formatted(spark, args.formatted, args.sf, args.names)
+        spark.stop()
+        return
     lines = [
         "# PLANS — physical-plan summaries per catalog query",
         "",

@@ -114,10 +114,9 @@ URL_ALLOW = (
 #: inputs the operators parse, not services anything connects to.
 FIXTURE_HOSTS = {"x.io", "ex.io", "other.org", "example.co.uk"}
 
-#: env vars the engine documents (TESTDATA/driver contract + JVM) plus
-#: bare tool knobs (REPS in tools/time_query.py)
+#: env vars the engine documents (TESTDATA/driver contract + JVM)
 ENV_ALLOW_RE = re.compile(
-    r"^(SPARK_|PYSPARK_|JAVA_|MIVDP_|ARROW_|TZ$|PATH$|HOME$|PYTEST_|REPS$)"
+    r"^(SPARK_|PYSPARK_|JAVA_|MIVDP_|ARROW_|TZ$|PATH$|HOME$|PYTEST_)"
 )
 
 #: baked-in third-party packages (everything else must be stdlib or local)

@@ -23,12 +23,16 @@ row-count equality at run time): ``a8_winsorize``,
 ``w3_tumbling_bucket``, ``dedup_exact``, ``a2_two_level_agg``,
 ``text_quality``, ``dedup_span_coverage``.
 
-Usage: python tools/pandas_baseline.py [sf_dir] [repeats]
+Usage: python tools/pandas_baseline.py [repeats] [SMALL_SF_DIR LARGE_SF_DIR]
+
+(default sf0.01 and sf0.1; a 10x input for the second decade comes from
+``python tools/measure.py --inflate 10 --keep DIR``).
 """
 
 from __future__ import annotations
 
 import hashlib
+import os
 import re
 import sys
 import time
@@ -163,7 +167,7 @@ def pd_span_coverage(docs: pd.DataFrame) -> pd.DataFrame:
     return out
 
 
-SFS = ("0.01", "0.1")
+SFS = ("/root/testdata/sf0.01", "/root/testdata/sf0.1")
 
 
 def _load(sf_dir: str) -> dict:
@@ -176,7 +180,8 @@ def _load(sf_dir: str) -> dict:
 
 def main() -> None:
     repeats = int(sys.argv[1]) if len(sys.argv) > 1 else 3
-    tables = {sf: _load(f"/root/testdata/sf{sf}") for sf in SFS}
+    sfs = tuple(sys.argv[2:4]) if len(sys.argv) > 3 else SFS
+    tables = {sf: _load(sf) for sf in sfs}
 
     def pandas_cases(sf: str) -> dict:
         t = tables[sf]
@@ -189,7 +194,7 @@ def main() -> None:
             "dedup_span_coverage": lambda: pd_span_coverage(t["docs"]),
         }
 
-    names = list(pandas_cases(SFS[0]))
+    names = list(pandas_cases(sfs[0]))
     spark = get_session(
         app_name="mivdp-pandas-baseline",
         master="local[32]",
@@ -202,24 +207,24 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     spark_dfs = {
-        (name, sf): QUERIES[name](spark, f"/root/testdata/sf{sf}")
+        (name, sf): QUERIES[name](spark, sf)
         for name in names
-        for sf in SFS
+        for sf in sfs
     }
 
     # warm-up both engines + semantics check (row counts must agree)
-    for sf in SFS:
+    for sf in sfs:
         for name, fn in pandas_cases(sf).items():
             n_pd = len(fn())
             n_sp = spark_dfs[(name, sf)].count()
             assert n_pd == n_sp, (name, sf, n_pd, n_sp)
             spark_dfs[(name, sf)].write.format("noop").mode("overwrite").save()
 
-    cells = [(name, sf) for name in names for sf in SFS]
+    cells = [(name, sf) for name in names for sf in sfs]
     best_pd = {c: float("inf") for c in cells}
     best_sp = {c: float("inf") for c in cells}
     for _ in range(repeats):  # interleaved, same rule as bench.py
-        for sf in SFS:
+        for sf in sfs:
             cases = pandas_cases(sf)
             for name in names:
                 t0 = time.perf_counter()
@@ -234,14 +239,15 @@ def main() -> None:
                 )
 
     print("(pandas pre-loaded in RAM; Spark re-scans parquet each run)")
+    a, b = (os.path.basename(sf.rstrip("/")) for sf in sfs)
     print(
-        "| operator | pandas sf0.01 | pandas sf0.1 | pd growth | "
-        "spark sf0.01 | spark sf0.1 | spark growth |"
+        f"| operator | pandas {a} | pandas {b} | pd growth | "
+        f"spark {a} | spark {b} | spark growth |"
     )
     print("|---|---|---|---|---|---|---|")
     for name in names:
-        p1, p2 = best_pd[(name, SFS[0])], best_pd[(name, SFS[1])]
-        s1, s2 = best_sp[(name, SFS[0])], best_sp[(name, SFS[1])]
+        p1, p2 = best_pd[(name, sfs[0])], best_pd[(name, sfs[1])]
+        s1, s2 = best_sp[(name, sfs[0])], best_sp[(name, sfs[1])]
         print(
             f"| {name} | {p1:.3f} | {p2:.3f} | {p2 / p1:.1f}× | "
             f"{s1:.3f} | {s2:.3f} | {s2 / s1:.1f}× |"
