@@ -225,7 +225,7 @@ def generate_time_series(
         meds = (
             _dg.trim_events_end_anchored(meds, data, has_stop=True)
             if end_anchored
-            else _dg.trim_events_start(meds, data, include_time, clamp_stop=True)
+            else _dg._trim_start(meds, include_time, clamp_stop=True)
         )
         bucketed = _dg.bucket_meds(meds, include_time, bucket)
         out["dense_med"] = _dg.densify_meds(bucketed, n_buckets)
@@ -237,7 +237,7 @@ def generate_time_series(
         evt = (
             _dg.trim_events_end_anchored(evt, data, has_stop=False)
             if end_anchored
-            else _dg.trim_events_start(evt, data, include_time)
+            else _dg._trim_start(evt, include_time, clamp_stop=False)
         )
         bucketed = _dg.bucket_point_events(evt, include_time, bucket, value_col=value_col)
         if name == "chart":

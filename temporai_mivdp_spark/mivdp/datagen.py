@@ -4,16 +4,19 @@ The reference materializes per-stay pandas frames in a Python loop over
 stays (create_Dict, :693-923). Here the whole densification is ONE plan
 over the long (stay_id, hour, itemid) shape:
 
-    bucketed events
-      -> hourly collapse (groupBy)                 [pivot_table mean]
-      -> (stay,item) dims x hour grid (explode)    [reindex range(los)]
-      -> left join observations                    [NaN rows]
+    events x broadcast(stays)                      [isin + los merge]
+      -> bucket + hourly collapse (groupBy)        [pivot_table mean]
+      -> per-series hour -> values map (groupBy)   [per-stay pivot]
+      -> explode hours 0..n-1, look each one up    [reindex range(los)]
       -> window ffill / imputation cascade         [ffill/bfill/fillna]
       -> mask arithmetic                           [signal derivation]
 
-Everything partitions by stay_id, so Catalyst plans a single exchange for
-the stage; stays are independent and the grid is bounded by
-los x items-per-stay, so skew is bounded by the longest stay.
+The stay table joins once, as a broadcast; the event side never joins
+after that. A chart grid plans two shuffles: the hourly collapse by
+(stay, item, hour), then the series grouping by (stay, item), whose
+partitioning every fill window reuses. Stays are independent and a
+series' grid is bounded by n_buckets, so skew is bounded by the longest
+stay.
 """
 
 from __future__ import annotations
@@ -22,12 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from temporai_mivdp_spark.operators.filters import semi_join_filter
-from temporai_mivdp_spark.operators.timeseries import (
-    bfill,
-    dense_grid,
-    ffill,
-    floor_hours,
-)
+from temporai_mivdp_spark.operators.timeseries import bfill, ffill, floor_hours
 
 # ---------------------------------------------------------------------------
 # generate_adm / generate_* (data_generation_icu.py:205-390)
@@ -46,7 +44,9 @@ def cohort_hours(cohort: DataFrame) -> DataFrame:
 
 
 def _with_los(events: DataFrame, data: DataFrame) -> DataFrame:
-    return events.join(F.broadcast(data.select("stay_id", "los")), "stay_id", "left")
+    """Keep the events of ``data``'s stays and attach their los: one
+    broadcast inner join (a semi-join and a left join on the same key)."""
+    return events.join(F.broadcast(data.select("stay_id", "los")), "stay_id", "inner")
 
 
 def prepare_point_events(
@@ -54,9 +54,7 @@ def prepare_point_events(
 ) -> DataFrame:
     """proc/out/chart prep (:226-337): start_time = event hours, keep
     start >= 0 and strictly before discharge (``los - start > 0``)."""
-    evt = semi_join_filter(events, data, "stay_id").withColumn(
-        "start_time", F.col(time_col).cast("long")
-    )
+    evt = events.withColumn("start_time", F.col(time_col).cast("long"))
     evt = evt.filter(F.col("start_time") >= 0)
     evt = _with_los(evt, data).filter((F.col("los") - F.col("start_time")) > 0)
     return evt.drop("los", time_col)
@@ -69,7 +67,6 @@ def prepare_meds(meds: DataFrame, data: DataFrame) -> DataFrame:
         "stop_time", F.col("stop_hours_from_admit").cast("long")
     )
     m = m.filter((F.col("stop_time") - F.col("start_time")) > 0)
-    m = semi_join_filter(m, data, "stay_id")
     m = _with_los(m, data).filter((F.col("los") - F.col("start_time")) > 0)
     m = m.withColumn(
         "stop_time", F.least(F.col("stop_time"), F.col("los"))
@@ -102,9 +99,13 @@ def trim_events_start(
     """Event trim for start-anchored tasks (:405-424): events starting at
     or before include_time survive (inclusive!); med stop clamps to the
     window."""
-    evt = semi_join_filter(events, data, "stay_id").filter(
-        F.col("start_time") <= include_time
-    )
+    return _trim_start(semi_join_filter(events, data, "stay_id"), include_time, clamp_stop)
+
+
+def _trim_start(evt: DataFrame, include_time: int, clamp_stop: bool) -> DataFrame:
+    """``trim_events_start`` for events already restricted to the kept
+    stays (``prepare_*`` against the same ``data``)."""
+    evt = evt.filter(F.col("start_time") <= include_time)
     if clamp_stop:
         evt = evt.withColumn(
             "stop_time", F.least(F.col("stop_time"), F.lit(include_time).cast("long"))
@@ -128,9 +129,7 @@ def trim_events_end_anchored(
     """Readmission event trim (:472-520): shift clocks by select_time;
     point events keep shifted start >= 0; med intervals keep shifted
     stop >= 0 and clamp start up to 0."""
-    evt = semi_join_filter(events, data, "stay_id").join(
-        F.broadcast(data.select("stay_id", "select_time")), "stay_id", "left"
-    )
+    evt = events.join(F.broadcast(data.select("stay_id", "select_time")), "stay_id", "inner")
     evt = evt.withColumn("start_time", F.col("start_time") - F.col("select_time"))
     if has_stop:
         evt = (
@@ -215,14 +214,35 @@ def per_adm_maxima(bucketed: DataFrame, keys: list[str]) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _observed_grid(bucketed: DataFrame, n_buckets: int) -> DataFrame:
-    """Grid = (stay, item) pairs observed for that stay x hours
-    0..n_buckets-1 — the reference reindexes each stay's pivot against
-    ``range(los)`` (:741-747); columns are only the stay's own items."""
-    dims = bucketed.select("stay_id", "itemid").dropDuplicates().withColumn(
-        "__len", F.lit(n_buckets)
+def _densify(hourly: DataFrame, n_buckets: int, values: list[str]) -> DataFrame:
+    """Dense grid of every (stay, item) series ``hourly`` holds (the
+    stay's own items, observed at any hour) x hours 0..n_buckets-1 — the
+    reference reindexes each stay's pivot against ``range(los)``
+    (:741-747) — with ``values`` looked up per cell (null where
+    unobserved) and ``__seen`` marking observed cells.
+
+    One groupBy(stay_id, itemid): each series collects its grid hours'
+    entries into an hour -> values map (``hourly`` holds at most one row
+    per hour, so the buffer holds at most n_buckets entries), then
+    explodes the grid and reads each hour from the map. The result stays
+    hash-partitioned by (stay_id, itemid), so the per-series fill
+    windows that follow add no exchange.
+    """
+    hour = F.col("start_time")
+    # the hours sequence(0, n_buckets-1) enumerates, also for n_buckets < 1
+    in_grid = hour.between(min(0, n_buckets - 1), max(0, n_buckets - 1))
+    entry = F.when(in_grid, F.struct(hour, F.struct(*values)))
+    series = hourly.groupBy("stay_id", "itemid").agg(
+        F.map_from_entries(F.collect_list(entry)).alias("__obs")
     )
-    return dense_grid(dims, "__len", hour_col="hour").drop("__len")
+    grid = series.withColumn(
+        "hour", F.explode(F.sequence(F.lit(0).cast("long"), F.lit(n_buckets - 1).cast("long")))
+    )
+    cell = F.col("__obs")[F.col("hour")]
+    return grid.select(
+        "stay_id", "itemid", "hour", cell.isNotNull().alias("__seen"),
+        *[cell[v].alias(v) for v in values],
+    )
 
 
 def densify_meds(bucketed_meds: DataFrame, n_buckets: int) -> DataFrame:
@@ -239,12 +259,9 @@ def densify_meds(bucketed_meds: DataFrame, n_buckets: int) -> DataFrame:
         F.avg("rate").alias("rate"),
         F.avg("amount").alias("amount"),
     )
-    grid = _observed_grid(hourly, n_buckets)
-    joined = grid.join(
-        hourly.withColumnRenamed("start_time", "hour"), ["stay_id", "itemid", "hour"], "left"
-    )
+    dense = _densify(hourly, n_buckets, ["stop_time", "rate", "amount"])
     keys = ["stay_id", "itemid"]
-    filled = ffill(joined, keys, "hour", "stop_time", out_col="__stop_f")
+    filled = ffill(dense, keys, "hour", "stop_time", out_col="__stop_f")
     filled = filled.na.fill({"__stop_f": 0.0})
     filled = ffill(filled, keys, "hour", "rate", out_col="rate")
     filled = ffill(filled, keys, "hour", "amount", out_col="amount")
@@ -264,14 +281,12 @@ def densify_meds(bucketed_meds: DataFrame, n_buckets: int) -> DataFrame:
 
 
 def densify_indicator(bucketed: DataFrame, n_buckets: int) -> DataFrame:
-    """proc/out densification (:784-843): 0/1 occurrence per grid cell via
-    the W8 operator. Output: (stay_id, hour, itemid, signal)."""
-    from temporai_mivdp_spark.operators.timeseries import event_indicator
-
-    observed = bucketed.select("stay_id", "itemid", F.col("start_time").alias("hour"))
-    grid = _observed_grid(bucketed, n_buckets)
-    return event_indicator(grid, observed, on=["stay_id", "itemid", "hour"]).select(
-        "stay_id", "hour", "itemid", "signal"
+    """proc/out densification (:784-843): 0/1 occurrence per grid cell.
+    Output: (stay_id, hour, itemid, signal)."""
+    observed = bucketed.select("stay_id", "itemid", "start_time").dropDuplicates()
+    return _densify(observed, n_buckets, []).select(
+        "stay_id", "hour", "itemid",
+        F.when(F.col("__seen"), F.lit(1)).otherwise(F.lit(0)).alias("signal"),
     )
 
 
@@ -290,11 +305,7 @@ def densify_chart(
     hourly = bucketed_chart.groupBy("stay_id", "itemid", "start_time").agg(
         F.avg("valuenum").alias("valuenum")
     )
-    grid = _observed_grid(hourly, n_buckets)
-    joined = grid.join(
-        hourly.withColumnRenamed("start_time", "hour"), ["stay_id", "itemid", "hour"], "left"
-    )
-    signaled = joined.withColumn(
+    signaled = _densify(hourly, n_buckets, ["valuenum"]).withColumn(
         "signal", F.when(F.col("valuenum").isNotNull(), 1).otherwise(0)
     )
     keys = ["stay_id", "itemid"]

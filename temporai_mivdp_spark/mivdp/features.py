@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 
 from temporai_mivdp_spark.mivdp.icd import standardize_icd
 from temporai_mivdp_spark.operators.aggregates import (
-    conditional_count,
     mode_vote_filter,
     two_level_agg,
     winsorize,
@@ -63,8 +62,15 @@ def extract_chart(chart_raw: DataFrame, cohort: DataFrame, uom_cut_off: float = 
     partitioned scan replaces the loop; the per-chunk dropna/join/dedup are
     ordinary transformations. UoM majority voting runs as the window-based
     mode_vote_filter (A7) instead of the per-itemid Python loop.
+
+    The valuenum predicate is spelled out (``na.drop`` drops null and NaN
+    alike) so that it already carries the ``IsNotNull`` the clip step
+    would otherwise infer into one branch only: the vote and clip
+    branches then plan one identical subtree, and both read one shared
+    exchange of a single chartevents scan.
     """
-    events = chart_raw.na.drop(subset=["valuenum"])
+    valuenum = F.col("valuenum")
+    events = chart_raw.filter(valuenum.isNotNull() & ~F.isnan(valuenum))
     joined = events.join(
         F.broadcast(cohort.select("stay_id", "intime")), "stay_id", "inner"
     )
@@ -166,12 +172,25 @@ def summary_events(
     events: DataFrame, missing_col: str | None = None
 ) -> DataFrame:
     """Per-itemid mean_frequency/total_count (+missing_count for med/chart:
-    rows where amount/valuenum == 0, feature_preproc_icu.py:341,375)."""
-    base = two_level_agg(events, inner_keys=["stay_id", "itemid"], outer_keys=["itemid"])
+    rows where amount/valuenum == 0, feature_preproc_icu.py:341,375).
+
+    With ``missing_col`` the missing count rides along two_level_agg's
+    single-exchange nesting as a per-(stay, item) partial sum, so the
+    table is read once and nothing joins back."""
     if missing_col is None:
-        return base
-    missing = conditional_count(events, ["itemid"], F.col(missing_col) == 0)
-    return base.join(missing, "itemid", "left").na.fill({"missing_count": 0})
+        return two_level_agg(events, inner_keys=["stay_id", "itemid"], outer_keys=["itemid"])
+    narrow = events.select(*dict.fromkeys(["stay_id", "itemid", missing_col])).repartition(
+        "itemid"
+    )
+    per_stay = narrow.groupBy("stay_id", "itemid").agg(
+        F.count(F.lit(1)).alias("__n"),
+        F.sum(F.when(F.col(missing_col) == 0, 1).otherwise(0)).alias("__missing"),
+    )
+    return per_stay.groupBy("itemid").agg(
+        F.avg("__n").alias("mean_frequency"),
+        F.sum("__n").cast("long").alias("total_count"),
+        F.sum("__missing").cast("long").alias("missing_count"),
+    )
 
 
 # --- selection (feature_preproc_icu.py:394-529) ---

@@ -98,8 +98,10 @@ def mode_vote_filter(
     needs no second scan — then every per-group statistic (total, number
     of distinct non-null values, mode, top count) comes from windows
     sharing that table's single (group) partitioning, and the verdicts
-    broadcast-join back. The fact table is scanned twice (aggregate +
-    join), aggregated once, and never window-sorted; the previous form
+    broadcast-join back. The input feeds two consumers (aggregate +
+    join); when it ends in a shuffle both plan identically (extract_chart's
+    dropDuplicates), AQE reuses that one exchange, so the source is read
+    once. It is aggregated once and never window-sorted; the previous form
     scanned it three times, aggregated it twice (counts + totals), and
     instantiated the counts subtree once per consumer — exchange reuse
     does not deduplicate repeated subplans (measured on the dedup
@@ -161,9 +163,10 @@ _WINSORIZE_SMALL_N = 4096
 #: more than sorting the whole input), above it the per-group sort wall
 #: compounds per decade while selection stays near linear. The gate is
 #: SCALE-ADAPTIVE by construction (it compares the observed input size,
-#: one cheap count at plan-build time, never a constant tuned to a core
-#: count), and both tiers return bit-identical bounds (r12 §a8selection
-#: equivalence evidence), so the choice is invisible in results.
+#: from plan statistics or one cheap count at plan-build time, never a
+#: constant tuned to a core count), and both tiers return bit-identical
+#: bounds (r12 §a8selection equivalence evidence), so the choice is
+#: invisible in results.
 _WINSORIZE_SORT_GATE_ROWS = 6_000_000
 
 #: Ceiling for the adaptive GK accuracy: percentile_approx buffers grow
@@ -372,6 +375,15 @@ def _exact_bounds_by_selection(
     return g2.select(*keys, *outs)
 
 
+def _leaf_bytes(df: DataFrame) -> int:
+    """Sum of the optimizer's ``sizeInBytes`` statistics over the leaves
+    of ``df``'s optimized plan, read from the plan without a job. Leaves
+    with no statistics (an RDD, a stream) report Spark's default size,
+    which is huge."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()  # noqa: SLF001
+    return sum(int(leaves.apply(i).stats().sizeInBytes()) for i in range(leaves.size()))
+
+
 def winsorize(
     df: DataFrame,
     group_key: str | Sequence[str],
@@ -390,9 +402,15 @@ def winsorize(
 
     ``exact=True`` computes linear-interpolated exact percentiles
     (numpy's default / DuckDB ``quantile_cont`` — required for oracle
-    parity). Two bit-identical tiers, chosen by a size gate (one cheap
-    count at plan-build time — r13; crossover measurements in
-    ``_WINSORIZE_SORT_GATE_ROWS``'s docstring):
+    parity). Two bit-identical tiers, chosen by a size gate on the
+    non-null input (crossover measurements in
+    ``_WINSORIZE_SORT_GATE_ROWS``'s docstring). The gate first reads the
+    optimizer's leaf ``sizeInBytes`` statistics: when they sum to at
+    most ``exact_sort_gate_rows`` it takes the window tier with no job,
+    which assumes the input holds at least 1 byte per row. Only a
+    larger input pays one labelled ``count()`` at build time. An input
+    packed below 1 byte per row may take the window tier above the row
+    gate; that costs sort time, never results:
 
     * at or below the gate: the rank-window plan
       (``_exact_bounds_by_window``) — one Tungsten radix sort, the
@@ -431,14 +449,22 @@ def winsorize(
     v = F.col(value_col)
     if exact:
         dfnn = df.filter(v.isNotNull()).select(*keys, v.alias("__v"))
-        # Size gate (r12-verdict item 3a): one count at plan-build time
-        # picks the provably-cheaper exact tier. The count is a
-        # column-pruned aggregate job (not a result cache — each build
-        # recomputes it from the input), deterministic in the data, and
-        # the two tiers are result-identical, so the gate can never
-        # change what the query computes.
-        n_total = dfnn.count()
-        if n_total <= exact_sort_gate_rows:
+        # Size gate (r12-verdict item 3a, see the docstring). The count
+        # is a column-pruned job, deterministic in the data and never a
+        # result cache; it gives the exact size the selection tier
+        # derives its accuracy from. The two tiers are result-identical,
+        # so the gate can never change what the query computes.
+        small = _leaf_bytes(dfnn) <= exact_sort_gate_rows
+        if not small:
+            sc = df.sparkSession.sparkContext
+            prev = sc.getLocalProperty("spark.job.description")
+            sc.setJobDescription("winsorize: size-gate count")
+            try:
+                n_total = dfnn.count()
+            finally:
+                sc.setLocalProperty("spark.job.description", prev)
+            small = n_total <= exact_sort_gate_rows
+        if small:
             bounds = _exact_bounds_by_window(
                 dfnn, keys, lower_pct / 100.0, upper_pct / 100.0
             )

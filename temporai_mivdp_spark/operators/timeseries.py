@@ -3,10 +3,13 @@ reference pipeline, re-expressed as column arithmetic, one groupBy, and
 window functions.
 
 Scale notes: every operator here partitions by the series key (stay_id in
-the clinical pipeline). The whole densify-and-impute chain (grid → join →
-ffill → mask) reuses one hash partitioning on that key, so Catalyst plans a
-single shuffle for the entire stage; series are independent, so skew is
-bounded by the longest single stay, not by data volume.
+the clinical pipeline); series are independent, so skew is bounded by the
+longest single stay, not by data volume. The window operators (ffill,
+bfill, the imputation cascade) share one partitioning and sort order, so
+a chain of them costs one shuffle. A grid LEFT JOIN of observations
+(dense_grid + event_indicator) is a real join, shuffling both sides on the
+cell key unless one side broadcasts; mivdp.datagen densifies in one
+grouped pass instead.
 """
 
 from __future__ import annotations

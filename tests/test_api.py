@@ -5,11 +5,14 @@ from __future__ import annotations
 
 import gzip
 import os
+import re
 import tempfile
 
 import pytest
 
 from temporai_mivdp_spark.mivdp import api
+from temporai_mivdp_spark.mivdp import features as feat
+from temporai_mivdp_spark.plans import plan_summary, read_schema_columns
 
 
 def _write_gz(path: str, text: str) -> None:
@@ -130,3 +133,75 @@ def test_unknown_label_rejected(spark, mimic_root):
     root, v, _ = mimic_root
     with pytest.raises(ValueError, match="unknown label"):
         api.extract_data(spark, root, v, use_icu=True, label="survival", persist=False)
+
+
+def test_builders_launch_no_job(spark, mimic_root):
+    """Building every frame of the chain, chart cleaning included, runs
+    no Spark job: all the work lands in the caller's actions."""
+    root, v, map_path = mimic_root
+    sc = spark.sparkContext
+    group = "api-build-only"
+    sc.setJobGroup(group, "frame builds", False)
+    try:
+        cohort, _ = api.extract_data(spark, root, v, use_icu=True, label="Mortality",
+                                     persist=False)
+        feats = api.feature_icu(spark, root, v, cohort, icd_map_path=map_path,
+                                persist=False)
+        feats = api.preprocess_features_icu(feats, clean_chart=True)
+        api.generate_summary_icu(feats)
+        api.generate_time_series(cohort, feats, label="Mortality")
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(jobs) == []
+
+
+def _executed_plan_of_write(spark, n_before: int) -> str:
+    """The executed (post-AQE) plan section of the first write run after
+    the status store held ``n_before`` executions."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()  # noqa: SLF001
+    for i in range(n_before, execs.size()):
+        desc = execs.apply(i).physicalPlanDescription()
+        if "InsertIntoHadoopFsRelationCommand" in desc:
+            # AQE labels the executed tree "Current" until its last update
+            return re.split(r"== (?:Final|Current) Plan ==", desc)[1].split(
+                "== Initial Plan =="
+            )[0]
+    raise AssertionError("no write execution recorded")
+
+
+def test_chart_chain_plan_shapes(spark, mimic_root, tmp_path):
+    """Plan pins for the chart chain, with the stage inputs read back from
+    parquet as the api's persisted layout has them: the written features
+    frame scans chartevents once (the vote and clip branches share one
+    exchange), its summary reads the features once with no join, and the
+    dense grid reads them once with no sort-merge join."""
+    root, v, _ = mimic_root
+    cohort, _ = api.extract_data(spark, root, v, use_icu=True, label="Mortality",
+                                 persist=False)
+    cohort.write.parquet(str(tmp_path / "cohort"))
+    cohort = spark.read.parquet(str(tmp_path / "cohort"))
+    feats = api.feature_icu(spark, root, v, cohort, diag_flag=False, out_flag=False,
+                            proc_flag=False, med_flag=False, persist=False)
+    feats = api.preprocess_features_icu(feats, clean_chart=True)
+
+    chart_path = str(tmp_path / "chart")
+    store = spark._jsparkSession.sharedState().statusStore()  # noqa: SLF001
+    n_before = store.executionsList().size()
+    feats["chart"].write.parquet(chart_path)
+    final = _executed_plan_of_write(spark, n_before)
+    assert len(re.findall(r"Scan csv", final)) == 1, final
+
+    chart = spark.read.parquet(chart_path)
+    summary = feat.summary_events(chart, missing_col="valuenum")
+    assert len(read_schema_columns(summary)) == 1
+    assert not [k for k in plan_summary(summary) if "Join" in k or "Cartesian" in k]
+    assert {r.itemid: r.missing_count for r in summary.collect()} == {220045: 0}
+
+    dense = api.generate_time_series(cohort, {"chart": chart}, label="Mortality")["dense_chart"]
+    # the features scan is the one reading valuenum (the other is the cohort)
+    assert sum("valuenum" in c for c in read_schema_columns(dense)) == 1
+    assert "SortMergeJoin" not in plan_summary(dense)

@@ -189,10 +189,15 @@ def mort_cohort(spark, fixtures):
 
 
 def test_extract_chart_uom_vote_and_hours(spark, fixtures, mort_cohort):
-    chart = feat.extract_chart(fixtures["chartevents"], mort_cohort)
+    raw = fixtures["chartevents"]
+    nan_row = spark.createDataFrame(
+        [(2001, ts("2150-01-01 14:00:00"), 220045, float("nan"), "bpm")], raw.schema
+    )
+    chart = feat.extract_chart(raw.unionByName(nan_row), mort_cohort)
     assert set(chart.columns) == {"stay_id", "itemid", "event_time_from_admit", "valuenum"}
     rows = chart.collect()
-    # minority 'BPM' row dropped (dominant share 48/49 > 0.95); null valuenum dropped
+    # minority 'BPM' row dropped (dominant share 48/49 > 0.95); null and
+    # NaN valuenum dropped (stay 2001 has only those)
     assert all(r.valuenum != 999.0 for r in rows)
     assert len([r for r in rows if r.stay_id == 2001]) == 0
     # hour floor: 07:30 - 06:00 intime = 1h

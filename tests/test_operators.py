@@ -139,7 +139,7 @@ def test_winsorize_exact_selection_bracket_path_matches_numpy(spark):
         ), name
 
 
-def test_winsorize_size_gate_tiers_are_result_identical(spark):
+def test_winsorize_size_gate_tiers_are_result_identical(spark, tmp_path):
     """The r13 size gate picks between the window and selection exact
     tiers at plan-build time; this pins that the two tiers clip a mixed
     smooth/tie/small corpus identically (the property the gate's
@@ -172,6 +172,29 @@ def test_winsorize_size_gate_tiers_are_result_identical(spark):
     a = sorted((r.g, r.x) for r in via_window.collect())
     b = sorted((r.g, r.x) for r in via_selection.collect())
     assert a == b
+
+    # file-backed input whose leaf statistics exceed the gate: the build
+    # still pays the labelled count (restoring the caller's description),
+    # and the selection tier it picks clips like the window tier
+    path = str(tmp_path / "winsorize_input")
+    df.write.parquet(path)
+    file_df = spark.read.parquet(path)
+    sc = spark.sparkContext
+    sc.setJobGroup("winsorize-gate", "caller description", False)
+    try:
+        via_file = agg_ops.winsorize(file_df, exact_sort_gate_rows=1000, **kw)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+        jobs = sc.statusTracker().getJobIdsForGroup("winsorize-gate")
+        description = sc.getLocalProperty("spark.job.description")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    store = sc._jsc.sc().statusStore()  # noqa: SLF001
+    assert jobs and {store.job(j).description().get() for j in jobs} == {
+        "winsorize: size-gate count"
+    }
+    assert description == "caller description"
+    assert sorted((r.g, r.x) for r in via_file.collect()) == a
 
     # adaptive accuracy: floor at the default, linear middle, hard cap
     assert _adaptive_accuracy(0) == _WINSORIZE_ACCURACY
