@@ -228,6 +228,14 @@ def pretrained_merges(spark: SparkSession, num_merges: int = 300) -> DataFrame:
     return spark.createDataFrame(rows, "rank: int, left: string, right: string")
 
 
+@lru_cache(maxsize=8)
+def _pretrained_ranks(num_merges: int = 300) -> dict[tuple[str, str], int]:
+    """``merge_ranks(pretrained_merges(spark, num_merges))`` without the
+    DataFrame round trip: the rank dict straight from the memoized list,
+    once per process. Callers must not mutate it."""
+    return {pair: i for i, pair in enumerate(pretrained_merges_list(num_merges))}
+
+
 def merge_ranks(merges: DataFrame) -> dict[tuple[str, str], int]:
     """Collect a merge table to the rank dict the apply kernel wants.
     Bounded by ``num_merges`` — a legitimate small-side collect."""
@@ -235,6 +243,20 @@ def merge_ranks(merges: DataFrame) -> dict[tuple[str, str], int]:
         (r["left"], r["right"]): int(r["rank"])
         for r in merges.select("rank", "left", "right").collect()
     }
+
+
+def _segment(
+    words: DataFrame, ranks: dict[tuple[str, str], int], word_col: str
+) -> DataFrame:
+    """``segment_words`` over an already-collected rank dict."""
+
+    @F.pandas_udf(T.ArrayType(T.StringType()))
+    def _pieces(col: pd.Series) -> pd.Series:
+        return col.map(lambda w: apply_merges_py(w, ranks))
+
+    return words.withColumn("pieces", _pieces(F.col(word_col))).withColumn(
+        "n_pieces", F.size("pieces")
+    )
 
 
 def segment_words(
@@ -247,42 +269,20 @@ def segment_words(
     BPE path — Arrow-batched, and it runs over word types, not the
     corpus (see module docstring). The merge table rides into the UDF
     closure as a plain dict (bounded by num_merges)."""
-    ranks = merge_ranks(merges)
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def _pieces(col: pd.Series) -> pd.Series:
-        return col.map(lambda w: apply_merges_py(w, ranks))
-
-    return words.withColumn("pieces", _pieces(F.col(word_col))).withColumn(
-        "n_pieces", F.size("pieces")
-    )
+    return _segment(words, merge_ranks(merges), word_col)
 
 
-def bpe_token_count(
+def _token_count(
     docs: DataFrame,
-    merges: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    out_col: str = "bpe_tokens",
-    dense: bool = True,
+    ranks: dict[tuple[str, str], int],
+    text_col: str,
+    id_col: str,
+    out_col: str,
 ) -> DataFrame:
-    """Per-document REAL BPE token count under a trained merge table:
-    ``(id_col, out_col)``, one row per input document (empty/blank docs
-    count 0).
-
-    Plan: (doc, word) occurrence counts (one map-side-combined
-    aggregate), the distinct-word slice of that output segments through
-    the pandas UDF once per TYPE, a word-keyed join (AQE broadcasts the
-    type table when it fits) carries ``n_pieces`` back, and one doc-keyed
-    sum of ``occurrences × n_pieces`` finishes. The corpus never passes
-    through Python.
-
-    ``dense=False`` skips the all-ids densification (an extra full scan
-    of ``docs`` plus an id-keyed dropDuplicates shuffle, guide §2.4) and
-    returns only docs with >= 1 word — rows the caller must left-join
-    and zero-fill itself. Use it when the caller already holds a frame
-    with every id (e.g. ``text_bpe_count``'s cheap-tier projection):
-    same result, one corpus pass and one shuffle fewer."""
+    """The sparse ``bpe_token_count`` (``dense=False``) over a rank dict:
+    one ``(id_col, out_col)`` row per id with >= 1 word. Shared by
+    ``bpe_token_count`` and ``pipeline.curation_gate``, which takes its
+    ranks from ``_pretrained_ranks`` and so builds with no Spark job."""
     tok = (
         docs.select(
             id_col,
@@ -297,12 +297,42 @@ def bpe_token_count(
         .agg(F.count(F.lit(1)).alias("__occ"))
     )
     types = tok.select("token").distinct()
-    seg = segment_words(types, merges).select("token", "n_pieces")
-    per_doc = (
+    seg = _segment(types, ranks, "token").select("token", "n_pieces")
+    return (
         tok.join(seg, "token")
         .groupBy(id_col)
         .agg(F.sum(F.col("__occ") * F.col("n_pieces")).alias(out_col))
     )
+
+
+def bpe_token_count(
+    docs: DataFrame,
+    merges: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    out_col: str = "bpe_tokens",
+    dense: bool = True,
+) -> DataFrame:
+    """Per-document REAL BPE token count under a trained merge table:
+    ``(id_col, out_col)``, one row per input document id (empty/blank
+    docs count 0; documents sharing an id are counted together).
+
+    Plan: (doc, word) occurrence counts (one map-side-combined
+    aggregate), the distinct-word slice of that output segments through
+    the pandas UDF once per TYPE, a word-keyed join (AQE broadcasts the
+    type table when it fits) carries ``n_pieces`` back, and one doc-keyed
+    sum of ``occurrences × n_pieces`` finishes. The corpus never passes
+    through Python. Building the frame collects ``merges`` to a rank
+    dict (one small job).
+
+    ``dense=False`` skips the all-ids densification (an extra full scan
+    of ``docs`` plus an id-keyed dropDuplicates shuffle, guide §2.4) and
+    returns only docs with >= 1 word — rows the caller must left-join
+    and zero-fill itself. Use it when the caller already holds a frame
+    with every id (e.g. ``text_bpe_count``'s cheap-tier projection, or
+    ``curation_gate``): same result, one corpus pass and one shuffle
+    fewer."""
+    per_doc = _token_count(docs, merge_ranks(merges), text_col, id_col, out_col)
     if not dense:
         return per_doc
     return (

@@ -19,8 +19,10 @@ oracles can reproduce them bit-for-bit.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
+
+from temporai_mivdp_spark.session import job_description
 
 
 def _md5_hash32(col: Column) -> Column:
@@ -1628,7 +1630,7 @@ def duplicate_clusters(
     """Resolve near-dup pairs into duplicate clusters: connected
     components by alternating large-star / small-star contraction
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14 — plain groupBy+join rounds, no graph library). Returns
+    SoCC'14 — plain window + shuffle rounds, no graph library). Returns
     (doc_id, cluster_id) where cluster_id is the smallest doc id
     reachable through the pair graph — the canonical keeper.
 
@@ -1646,59 +1648,71 @@ def duplicate_clusters(
     * small-star: emit (v, m) for v <= u plus the center's own (u, m).
 
     Both phases preserve connectivity; the edge set monotonically
-    flattens into per-component stars rooted at the minimum id. Each
-    round is one groupBy (per-center min) + one join back, on an edge
-    set that only shrinks; one count action per round doubles as the
-    convergence check and a rotated localCheckpoint keeps lineage
-    shallow WITHOUT accumulating cache: each round's eager checkpoint
+    flattens into per-component stars rooted at the minimum id.
+
+    One job set per round. Each half-round takes ``m`` from a window
+    over ``u`` and ends in ``repartition(u).dropDuplicates()``: hash
+    partitioning on ``u`` satisfies both the dedup and the next window,
+    so a half-round costs exactly one exchange. The round's output is
+    then checked for convergence INSIDE its own checkpoint job: a row is
+    bad unless its ``u`` is a root (every neighbour larger) or a leaf
+    (exactly one neighbour, and it is smaller), and an ``observe``d sum
+    of bad rows arrives with the checkpoint. Zero (or null, the empty
+    graph) means every edge joins a root to a leaf, i.e. the graph is a
+    forest of stars each rooted at its component's minimum — exactly a
+    fixed point of the round, so no confirming round is run. The input
+    is not checkpointed; each round's eager checkpoint runs under the
+    job description ``duplicate_clusters: star round <k>`` and
     deterministically unpersists the previous round's backing RDDs
     (dead weight the moment the new one materializes), so at most ONE
     checkpoint — the one backing the returned frame — is ever live,
     instead of O(log n) pinned RDDs per call lingering until context
-    GC.
+    GC. ``max_iterations`` bounds the round count; running out raises.
     """
-    edges, live_ids = _rotate_checkpoint(
-        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-        .unionByName(pairs.select(F.col(id_b).alias("u"), F.col(id_a).alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .dropDuplicates(),
-        set(),
-    )
+    u, v, m = F.col("u"), F.col("v"), F.col("m")
+    by_u = Window.partitionBy("u")
+
+    def distinct_by_u(e: DataFrame) -> DataFrame:
+        return e.repartition("u").dropDuplicates()
 
     def star_round(e: DataFrame, large: bool) -> DataFrame:
-        mins = e.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        j = e.join(mins, "u")
+        j = e.withColumn("m", F.least(F.min("v").over(by_u), u))
         if large:
-            emitted = j.filter(F.col("v") > F.col("u")).select("v", "m")
+            emitted = j.filter(v > u).select("v", "m")
         else:
-            emitted = (
-                j.filter(F.col("v") <= F.col("u"))
-                .select("v", "m")
-                .unionByName(mins.select(F.col("u").alias("v"), "m"))
+            emitted = j.filter(v <= u).select("v", "m").unionByName(
+                j.select(u.alias("v"), "m")
             )
-        sym = emitted.filter(F.col("v") != F.col("m"))
-        return (
-            sym.select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionByName(sym.select(F.col("m").alias("u"), F.col("v").alias("v")))
-            .dropDuplicates()
+        sym = emitted.filter(v != m)
+        return distinct_by_u(
+            sym.select(v.alias("u"), m.alias("v")).unionByName(
+                sym.select(m.alias("u"), v.alias("v"))
+            )
         )
 
-    prev_sig = None
-    for it in range(max_iterations):
-        edges = star_round(edges, large=True)
-        edges, live_ids = _rotate_checkpoint(
-            star_round(edges, large=False), live_ids
+    edges = distinct_by_u(
+        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
+        .unionByName(pairs.select(F.col(id_b).alias("u"), F.col(id_a).alias("v")))
+        .filter(u != v)
+    )
+    root_or_leaf = (F.min("v").over(by_u) > u) | (
+        (F.count(F.lit(1)).over(by_u) == 1) & (v < u)
+    )
+    live_ids: set = set()
+    for k in range(1, max_iterations + 1):
+        edges = star_round(star_round(edges, large=True), large=False)
+        obs = Observation()
+        flagged = (
+            edges.withColumn("__bad", (~root_or_leaf).cast("long"))
+            .observe(obs, F.sum("__bad").alias("bad"))
+            .drop("__bad")
         )
-        # one agg action per round: convergence signature (count + an
-        # order-independent hash-sum) AND materialization point
-        row = edges.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64("u", "v")).alias("h"),
-        ).collect()[0]
-        sig = (row["n"], row["h"])
-        if sig == prev_sig:
+        with job_description(
+            pairs.sparkSession, f"duplicate_clusters: star round {k}"
+        ):
+            edges, live_ids = _rotate_checkpoint(flagged, live_ids)
+        if not obs.get["bad"]:
             break
-        prev_sig = sig
     else:
         raise RuntimeError(
             f"duplicate_clusters did not converge in {max_iterations} "

@@ -246,9 +246,25 @@ def curation_gate(
     ``lang_pred`` (trigram NB language-ID — the 20-language fidelity
     tier, not the marker heuristic), ``bpe_tokens`` (REAL pretrained-BPE
     counts, the packing/budget currency), and the boolean ``keep``.
-    Filtering is the caller's choice (``.filter("keep")``) — ingest
-    pipelines usually want the rejects too, routed to a quarantine sink
-    with their gate columns as the audit trail.
+    Output columns are ``id_col``, the other input columns in order,
+    then those five. Filtering is the caller's choice
+    (``.filter("keep")``) — ingest pipelines usually want the rejects
+    too, routed to a quarantine sink with their gate columns as the
+    audit trail.
+
+    Plan: the two quality features are projections on ``docs`` itself,
+    language-ID carries every column through (``passthrough``), and the
+    sparse BPE sum is left-joined once and zero-filled — no join of
+    ``docs`` back to a projection of itself. With ``merges=None`` the
+    pretrained ranks come from a per-process dict and the langid weights
+    are memoized too, so building launches no Spark job; a ``merges``
+    DataFrame is collected to its rank dict (one small job).
+
+    Rows with a null ``id_col`` are dropped. Each input row yields one
+    output row, but the id-keyed language scores and BPE sums pool the
+    text of every row sharing an id, so duplicate-id documents share
+    ``lang_pred`` and ``bpe_tokens`` (their ``n_tokens``/``punct_ratio``
+    stay per row).
 
     Every stage is micro-batch-safe: quality is a projection, langid is
     an explode + broadcast-dimension join + doc-keyed sum, BPE counting
@@ -258,16 +274,27 @@ def curation_gate(
     from temporai_mivdp_spark.llmdata import bpe as bpe_mod
     from temporai_mivdp_spark.llmdata import text as text_mod
 
-    if merges is None:
-        merges = bpe_mod.pretrained_merges(docs.sparkSession)
-    q = text_mod.quality_features(docs, text_col=text_col, id_col=id_col).select(
-        id_col, "n_tokens", "punct_ratio"
+    ranks = (
+        bpe_mod._pretrained_ranks()
+        if merges is None
+        else bpe_mod.merge_ranks(merges)
     )
-    lang = text_mod.language_id_ngram(docs, text_col=text_col, id_col=id_col).select(
-        id_col, "lang_pred"
+    quality = text_mod._quality_columns(F.col(text_col))
+    rest = [c for c in docs.columns if c != id_col]
+    carried = [*rest, "n_tokens", "punct_ratio"]
+    feats = docs.filter(F.col(id_col).isNotNull()).select(
+        id_col,
+        *rest,
+        quality["n_tokens"].alias("n_tokens"),
+        quality["punct_ratio"].alias("punct_ratio"),
     )
-    real = bpe_mod.bpe_token_count(docs, merges, text_col=text_col, id_col=id_col)
-    out = docs.join(q, id_col).join(lang, id_col).join(real, id_col)
+    lang = text_mod.language_id_ngram(
+        feats, text_col=text_col, id_col=id_col, passthrough=carried
+    ).select(id_col, *carried, "lang_pred")
+    real = bpe_mod._token_count(feats, ranks, text_col, id_col, "bpe_tokens")
+    out = lang.join(real, id_col, "left").withColumn(
+        "bpe_tokens", F.coalesce("bpe_tokens", F.lit(0).cast("long"))
+    )
     keep = (
         (F.col("n_tokens") >= min_tokens)
         & (F.col("punct_ratio") < max_punct)

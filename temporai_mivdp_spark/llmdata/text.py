@@ -11,6 +11,7 @@ exists for), so its Arrow kernel runs ONLY on rows a native regex flags
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import lru_cache
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -120,26 +121,33 @@ def _count_any_occurrence(text: Column, words: list[str]) -> Column:
     return F.regexp_count(normalize_text(text), F.lit(pat)).cast("long")
 
 
+def _quality_columns(t: Column) -> dict[str, Column]:
+    """The ``quality_features`` expressions over the text column ``t``,
+    keyed by output name — shared with ``pipeline.curation_gate``, which
+    adds two of them to its input frame instead of joining the feature
+    frame back."""
+    n_chars = F.length(t)
+    n_tokens = token_count(t)
+    stop_hits = _count_any_occurrence(t, STOPWORDS)
+    return {
+        "n_chars": n_chars,
+        "n_tokens": n_tokens,
+        "chars_per_token": n_chars / n_tokens,
+        # count the kept class directly: same value as length(replace-all-
+        # others-away) with no intermediate string per doc
+        "punct_ratio": F.regexp_count(t, F.lit(r"[.!?,;:]")) / n_chars,
+        "digit_ratio": F.regexp_count(t, F.lit(r"[0-9]")) / n_chars,
+        "stopword_ratio": stop_hits / n_tokens,
+    }
+
+
 def quality_features(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Per-document quality signals (the C4/Gopher-style cheap filters):
     length, word stats, punctuation/digit ratios, stopword ratio."""
-    t = F.col(text_col)
-    n_chars = F.length(t)
-    n_tokens = token_count(t)
-    stop_hits = _count_any_occurrence(t, STOPWORDS)
-    return docs.select(
-        id_col,
-        n_chars.alias("n_chars"),
-        n_tokens.alias("n_tokens"),
-        (n_chars / n_tokens).alias("chars_per_token"),
-        # count the kept class directly: same value as length(replace-all-
-        # others-away) with no intermediate string per doc
-        (F.regexp_count(t, F.lit(r"[.!?,;:]")) / n_chars).alias("punct_ratio"),
-        (F.regexp_count(t, F.lit(r"[0-9]")) / n_chars).alias("digit_ratio"),
-        (stop_hits / n_tokens).alias("stopword_ratio"),
-    )
+    cols = _quality_columns(F.col(text_col))
+    return docs.select(id_col, *[c.alias(name) for name, c in cols.items()])
 
 
 def repetition_features(
@@ -908,6 +916,22 @@ def trigram_score_tables(top_k_per_lang: int = TRIGRAM_TOP_K) -> dict[str, dict[
     return tables
 
 
+@lru_cache(maxsize=8)
+def _trigram_weight_rows(
+    top_k_per_lang: int,
+) -> tuple[tuple[str, ...], tuple[tuple[str, list[int]], ...]]:
+    """``(langs, rows)`` for ``language_id_ngram``'s broadcast dimension:
+    the sorted language list and one ``(trigram, weights in langs
+    order)`` row per shared feature. Derived from
+    ``trigram_score_tables`` once per process (like
+    ``bpe.pretrained_merges_list``) — the tables are a pure function of
+    the in-repo samples, and re-deriving them cost every call ~0.2 s."""
+    tables = trigram_score_tables(top_k_per_lang)
+    langs = tuple(sorted(tables))
+    feats = sorted(next(iter(tables.values())))
+    return langs, tuple((g, [tables[lang][g] for lang in langs]) for g in feats)
+
+
 #: Unicode-script fallback for zero-feature docs (applied ONLY when no
 #: trigram feature matched): unambiguous script ranges map straight to
 #: their single in-table language. Syllabic/ideographic scripts have
@@ -961,8 +985,7 @@ def language_id_ngram(
     Accuracy on the held-out samples beats the marker heuristic
     (asserted in tests); both tiers misroute languages outside the
     table, honestly — extend ``TRAIN_SAMPLES`` to grow coverage."""
-    tables = trigram_score_tables(top_k_per_lang)
-    langs = sorted(tables)
+    langs, weight_rows = _trigram_weight_rows(top_k_per_lang)
     # Materialize the normalized text ONCE per row before the explode.
     # Passing the normalize expression itself into the transform lambda
     # re-evaluates the regexp_replace at EVERY trigram position —
@@ -982,10 +1005,8 @@ def language_id_ngram(
             ).alias("__g"),
         )
     )
-    feats = sorted(next(iter(tables.values())))
-    weight_rows = [(g, [tables[lang][g] for lang in langs]) for g in feats]
     wdf = docs.sparkSession.createDataFrame(
-        weight_rows, "__g: string, __w: array<int>"
+        weight_rows, "__g: string, __w: array<int>", verifySchema=False
     )
     scores = (
         grams.join(F.broadcast(wdf), "__g")

@@ -14,6 +14,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from temporai_mivdp_spark.session import job_description
+
 
 def two_level_agg(
     df: DataFrame,
@@ -456,13 +458,8 @@ def winsorize(
         # so the gate can never change what the query computes.
         small = _leaf_bytes(dfnn) <= exact_sort_gate_rows
         if not small:
-            sc = df.sparkSession.sparkContext
-            prev = sc.getLocalProperty("spark.job.description")
-            sc.setJobDescription("winsorize: size-gate count")
-            try:
+            with job_description(df.sparkSession, "winsorize: size-gate count"):
                 n_total = dfnn.count()
-            finally:
-                sc.setLocalProperty("spark.job.description", prev)
             small = n_total <= exact_sort_gate_rows
         if small:
             bounds = _exact_bounds_by_window(

@@ -18,6 +18,8 @@ we tune instead is the optimizer/runtime surface that matters at 100 TB:
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import SparkSession
 
 #: Confs applied to every session this engine creates. Values chosen for
@@ -52,6 +54,13 @@ DEFAULT_CONFS: dict[str, str] = {
     # sources.load_table converts them to TimestampType (µs truncation,
     # identical to DuckDB's ns->µs cast).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # PySpark's DataFrame debugging walks the Python stack on every
+    # ``F.*``/Column call (about 4 py4j round trips each) to attach a call
+    # site to error messages; Spark documents "a non-trivial performance
+    # overhead". Builders make hundreds of such calls, so plan
+    # construction pays it per expression. Off, errors only lose that
+    # Python call site.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 
@@ -84,6 +93,22 @@ def get_session(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def job_description(spark: SparkSession, label: str):
+    """Run the block's Spark jobs under the description ``label``, so an
+    eager job inside a builder is attributed to the operator that
+    launched it, then restore the caller's ``spark.job.description``.
+    The job group is left alone: a caller grouping its jobs still sees
+    these ones in its group."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
 
 
 def get_test_session(cpus: int = 4) -> SparkSession:

@@ -231,19 +231,18 @@ def ingest_curation_stream(
     this module), with the usual idempotent batch-partitioned writes:
     a replayed epoch overwrites its own partitions byte-for-byte.
 
-    The pretrained merge table derives once per stream build (driver
-    side, no model file) and rides into every micro-batch — it is a
-    fixed tokenizer, exactly what a production ingest does.
+    Each micro-batch's gate takes the pretrained merge ranks from the
+    per-process memoized table (``merges=None``: driver side, no model
+    file, no merge-table collect per batch) — a fixed tokenizer, exactly
+    what a production ingest does — so building a batch's gate launches
+    no Spark job.
     """
-    from temporai_mivdp_spark.llmdata.bpe import pretrained_merges
     from temporai_mivdp_spark.llmdata.pipeline import curation_gate
-
-    merges = pretrained_merges(spark)
 
     def _process(batch: DataFrame, batch_id: int) -> None:
         gated = curation_gate(
             batch,
-            merges,
+            None,
             min_tokens=min_tokens,
             max_punct=max_punct,
             keep_langs=keep_langs,

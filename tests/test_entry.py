@@ -9,6 +9,8 @@ from tests.conftest import SF_SMOKE
 
 
 def test_entry_returns_rows(spark):
+    # PySpark's per-call stack capture is off in every engine session
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
     df = entrymod.entry(spark)
     assert df.count() > 0
 

@@ -556,6 +556,138 @@ def test_duplicate_clusters_transitive(spark):
     assert kept == {1, 10, 99}   # one keeper per cluster + untouched doc
 
 
+def _union_find_labels(pairs):
+    """Reference labels: every node of the pair graph (self-loops
+    alone add no node) mapped to the smallest id of its component."""
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        if a != b:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for a, b in pairs if a != b for x in (a, b)}
+
+
+@pytest.mark.parametrize(
+    "pairs",
+    [
+        [(i, i + 1) for i in range(12)],
+        [(i + 1, i) for i in range(12)],
+        [(5, i) for i in (1, 2, 3, 4, 6, 7, 8)],
+        [(a, b) for a in range(6) for b in range(a + 1, 6)],
+        [(1, 1), (2, 2), (2, 3), (7, 7)],
+        [(1, 2), (2, 1), (1, 2), (3, 4), (4, 3), (4, 2)],
+        [],
+    ],
+    ids=["chain", "reversed-chain", "star-nonmin-root", "6-clique",
+         "self-loops", "dup-and-reversed-edges", "empty"],
+)
+def test_duplicate_clusters_matches_union_find(spark, pairs):
+    df = spark.createDataFrame(pairs, "id_a: long, id_b: long")
+    got = {r.doc_id: r.cluster_id for r in dedup.duplicate_clusters(df).collect()}
+    assert got == _union_find_labels(pairs)
+
+
+def _jobs_of(spark, group, build):
+    """Run ``build()`` under job group ``group``; return its result and
+    the descriptions of the jobs it launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "caller description", False)
+    try:
+        out = build()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+        ids = sc.statusTracker().getJobIdsForGroup(group)
+        assert sc.getLocalProperty("spark.job.description") == "caller description"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    store = sc._jsc.sc().statusStore()  # noqa: SLF001
+    descs = [store.job(j).description() for j in ids]
+    return out, [d.get() if d.isDefined() else None for d in descs]
+
+
+def test_duplicate_clusters_star_forest_converges_in_one_round(spark):
+    """A 4-clique plus a pair is a star forest after one round, and the
+    in-job convergence check sees it: no confirming second round, and
+    every eager job is labelled with its round."""
+    pairs = spark.createDataFrame(
+        [(a, b) for a in range(1, 5) for b in range(a + 1, 5)] + [(10, 11)],
+        "id_a: long, id_b: long",
+    )
+    out, descs = _jobs_of(
+        spark, "dc-one-round", lambda: dedup.duplicate_clusters(pairs)
+    )
+    assert descs and set(descs) == {"duplicate_clusters: star round 1"}
+    assert {r.doc_id: r.cluster_id for r in out.collect()} == {
+        1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10,
+    }
+
+
+@pytest.fixture(scope="module")
+def gate_docs(spark, tmp_path_factory):
+    """A small corpus read back from parquet, as the batch pipeline and
+    the streaming twin see their input."""
+    path = str(tmp_path_factory.mktemp("gate") / "docs")
+    rows = [
+        (1, "the quick brown fox jumps over the lazy dog and runs away fast", "a"),
+        (2, "el rapido zorro marron salta sobre el perro y los gatos hoy", "b"),
+        (3, "short!!", "c"),
+        (4, "", "d"),
+        (5, None, "e"),
+    ]
+    spark.createDataFrame(rows, "doc_id: long, text: string, src: string").write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_curation_gate_builds_without_a_job(spark, gate_docs):
+    from temporai_mivdp_spark.llmdata.pipeline import curation_gate
+
+    gated, descs = _jobs_of(spark, "gate-build", lambda: curation_gate(gate_docs))
+    assert descs == []
+    assert gated.columns == [
+        "doc_id", "text", "src", "n_tokens", "punct_ratio", "lang_pred",
+        "bpe_tokens", "keep",
+    ]
+
+
+def test_curation_gate_reads_its_input_at_most_four_times(spark, gate_docs):
+    """No self-joins: the quality features ride on the input rows, so
+    the executed plan scans the input for langid's grams and rows and
+    for the BPE sum only (the joined-back version scanned it 7 times)."""
+    import re
+
+    from temporai_mivdp_spark.llmdata.pipeline import curation_gate
+    from temporai_mivdp_spark.plans import executed_plan
+
+    gated = curation_gate(gate_docs)
+    assert len(gated.collect()) == 5
+    final = re.split(r"== (?:Final|Current) Plan ==", executed_plan(gated))[1]
+    final = final.split("== Initial Plan ==")[0]
+    assert 1 <= len(re.findall(r"FileScan parquet", final)) <= 4, final
+
+
+def test_curation_gate_one_row_per_input_row(spark):
+    """A repeated id yields one output row per input row (not k^3); the
+    id-keyed BPE sum and language scores pool both texts, and a null id
+    is dropped."""
+    from temporai_mivdp_spark.llmdata.pipeline import curation_gate
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma"), (1, "delta epsilon"), (2, "zeta"), (None, "eta")],
+        "doc_id: long, text: string",
+    )
+    rows = curation_gate(docs).collect()
+    assert sorted((r.doc_id, r.n_tokens) for r in rows) == [(1, 2), (1, 3), (2, 1)]
+    pooled = {r.bpe_tokens for r in rows if r.doc_id == 1}
+    assert len(pooled) == 1
+
+
 def test_count_occurrences_consecutive_tokens(spark):
     df = spark.createDataFrame([(1, "the the the cat")], "doc_id: long, text: string")
     out = text.language_id(df).collect()[0]
