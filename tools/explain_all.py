@@ -8,6 +8,12 @@ Regenerate after operator changes:
 
     python tools/explain_all.py
 
+The session is ``tools/measure.py``'s, at ``local[32]`` by default
+(``--cores``): the committed PLANS.json pins were made at 32 cores, and
+plans can depend on parallelism (e.g. the Arrow top-k repartitions by
+defaultParallelism), so a regeneration at another core count moves keys
+that did not change.
+
 With ``--formatted DIR`` it instead writes ``.explain("formatted")`` of
 each named catalog query to ``DIR/<name>.txt`` (planning only, nothing
 executes) — before/after plan evidence for a change:
@@ -27,9 +33,9 @@ sys.path.insert(0, ".")
 
 import __spark_entry__ as entrymod  # noqa: E402
 from bench import HEADLINE, PINNED_EXTRAS  # noqa: E402
+from measure import session  # noqa: E402
 from temporai_mivdp_spark.plans import plan_summary, pushed_filters  # noqa: E402
 from temporai_mivdp_spark.plans.fingerprint import plan_fingerprint  # noqa: E402
-from temporai_mivdp_spark.session import get_session  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 #: Fingerprints are taken at the bench scale factor: plan *shape* is
@@ -63,23 +69,7 @@ def main() -> None:
     args = ap.parse_args()
     if bool(args.formatted) != bool(args.names):
         ap.error("--formatted DIR and query names go together")
-    # Session mirrors bench.py exactly — plans can depend on parallelism
-    # (e.g. the Arrow top-k repartitions by defaultParallelism), so the
-    # reference fingerprints must come from the same master/partitions.
-    spark = get_session(
-        app_name="mivdp-explain",
-        master=f"local[{args.cores}]",
-        shuffle_partitions=args.cores,
-        extra_conf={
-            "spark.ui.enabled": "false",
-            "spark.ui.showConsoleProgress": "false",
-            # mirror bench.py: fingerprints of eager-stage plans (packing
-            # boundary samples, AQE finalization) execute small jobs at
-            # sf0.1; the 32-thread local JVM needs bench's heap for them
-            "spark.driver.memory": "16g",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session(args.cores)
     if args.formatted:
         write_formatted(spark, args.formatted, args.sf, args.names)
         spark.stop()
@@ -102,25 +92,8 @@ def main() -> None:
         nodes = ", ".join(f"{k}×{v}" for k, v in sorted(s.items()))
         pushed = "; ".join(pf[:4]) + ("…" if len(pf) > 4 else "") if pf else "—"
         lines.append(f"| {name} | {nodes} | {pushed} |")
-    # Preserve the host-normalized timings section bench.py maintains
-    # between its sentinel comments (see bench.py NORM_BEGIN/NORM_END).
-    from bench import NORM_BEGIN, NORM_END
-
-    norm_section = ""
-    try:
-        old = open("PLANS.md").read()
-        if NORM_BEGIN in old and NORM_END in old:
-            norm_section = (
-                "\n"
-                + NORM_BEGIN
-                + old.split(NORM_BEGIN, 1)[1].split(NORM_END, 1)[0]
-                + NORM_END
-                + "\n"
-            )
-    except FileNotFoundError:
-        pass
     with open("PLANS.md", "w") as f:
-        f.write("\n".join(lines) + "\n" + norm_section)
+        f.write("\n".join(lines) + "\n")
     print(f"wrote PLANS.md ({len(lines) - 8} queries)")
 
     qs = entrymod.queries()

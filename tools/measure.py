@@ -20,7 +20,8 @@ Axes:
   per core count, all reading the same input.
 * ``--repeats``: timed executions per query.
 
-Method, per JVM: every query is built and run once untimed (JIT,
+Method, per JVM (``time_queries``, which ``bench.py`` also times
+through): every query is built and run once untimed (JIT,
 codegen, first-touch shuffle files), then built again under the timer
 (``build_s``, including any eager jobs the builder runs), then executed
 ``--repeats`` rounds to a noop sink, interleaved across queries so one
@@ -74,6 +75,8 @@ REPO = os.path.dirname(TOOLS)
 sys.path[:0] = [REPO, TOOLS]
 
 MB = 1024.0 * 1024.0
+#: the default core count: the cores this process may run on
+HOST_CORES = len(os.sched_getaffinity(0))
 FACT_SHIFT = 10**7
 #: 5460 = 4*3*5*7*13: every residue class the catalog and the media
 #: fixtures key on (doc_id mod 2..7, 10, 12, 13) repeats exactly in each
@@ -94,7 +97,13 @@ FACTS = {
 DIMS = ("region", "nation", "supplier", "part")
 
 
-def _session(cores: int):
+def session(cores: int):
+    """The measurement session: ``local[cores]`` with ``cores`` shuffle
+    partitions, an 8 GB driver heap, no UI, and enough retained jobs and
+    stages for ``stage_totals`` to see every run. On a 4-vCPU, 15 GB
+    host (local[4], sf0.1) the bench headline measured slower with a
+    4 GB heap than with 8 GB, with no spill recorded at either; 16 GB
+    would exceed that host's RAM."""
     from temporai_mivdp_spark.session import get_session
 
     spark = get_session(
@@ -104,7 +113,7 @@ def _session(cores: int):
         extra_conf={
             "spark.ui.enabled": "false",
             "spark.ui.showConsoleProgress": "false",
-            "spark.driver.memory": "4g",
+            "spark.driver.memory": "8g",
             "spark.ui.retainedJobs": "20000",
             "spark.ui.retainedStages": "20000",
         },
@@ -200,28 +209,27 @@ def stage_totals(store, first_job: int) -> dict:
     }
 
 
-def run_cores(args) -> None:
-    """Child: time every query in this JVM; one record per query."""
+def time_queries(spark, fns: dict, sf: str, repeats: int) -> dict[str, dict]:
+    """Time every ``fn(spark, sf) -> DataFrame`` in ``fns`` in this
+    session (see Method); returns ``{name: record}`` in ``fns`` order."""
     from perfbench.trace import StatusStore
 
-    cores = args.cores[0]
-    spark = _session(cores)
     store = StatusStore(spark)
-    fns = {q: resolve(q) for q in args.queries}
+    cores = spark.sparkContext.defaultParallelism
 
     def noop(df) -> None:
         df.write.format("noop").mode("overwrite").save()
 
     for q, fn in fns.items():
-        noop(fn(spark, args.sf))
+        noop(fn(spark, sf))
     dfs, build = {}, {}
     for q, fn in fns.items():
         t0 = time.perf_counter()
-        dfs[q] = fn(spark, args.sf)
+        dfs[q] = fn(spark, sf)
         build[q] = time.perf_counter() - t0
     samples = {q: [] for q in fns}
     stages = {}
-    for _ in range(args.repeats):
+    for _ in range(repeats):
         for q, df in dfs.items():
             first = store.next_job_id()
             t0 = time.perf_counter()
@@ -230,22 +238,32 @@ def run_cores(args) -> None:
             if dt <= min(samples[q], default=dt):
                 stages[q] = stage_totals(store, first)
             samples[q].append(dt)
+    recs = {}
     for q, df in dfs.items():
         rows, digest = result_hash(df)
-        print(json.dumps({
+        recs[q] = {
             "query": q, "cores": cores,
             "build_s": round(build[q], 3),
             "exec_min_s": round(min(samples[q]), 3),
             "exec_median_s": round(statistics.median(samples[q]), 3),
             "exec_s": [round(s, 3) for s in samples[q]],
             "rows": rows, "hash": digest, "stages": stages[q],
-        }), flush=True)
+        }
+    return recs
+
+
+def run_cores(args) -> None:
+    """Child: time every query in this JVM; one record per query."""
+    spark = session(args.cores[0])
+    fns = {q: resolve(q) for q in args.queries}
+    for rec in time_queries(spark, fns, args.sf, args.repeats).values():
+        print(json.dumps(rec), flush=True)
     spark.stop()
 
 
 def run_inflate(args) -> None:
     """Child: write the inflated input to ``args.keep``."""
-    spark = _session(max(args.cores))
+    spark = session(max(args.cores))
     tables = inflate(spark, args.sf, args.keep, args.inflate)
     print(json.dumps({"inflate": args.inflate, "sf": args.sf, "tables": tables}), flush=True)
     spark.stop()
@@ -300,7 +318,7 @@ def parse(argv=None):
     p.add_argument("--sf", default="/root/testdata/sf0.1")
     p.add_argument("--inflate", type=int, default=0, metavar="K")
     p.add_argument("--keep", metavar="DIR")
-    p.add_argument("--cores", type=ints, default=[len(os.sched_getaffinity(0))])
+    p.add_argument("--cores", type=ints, default=[HOST_CORES])
     p.add_argument("--repeats", type=int, default=3)
     p.add_argument("--role", choices=["inflate", "cores"], help=argparse.SUPPRESS)
     args = p.parse_args(argv)

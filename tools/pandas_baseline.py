@@ -26,7 +26,8 @@ row-count equality at run time): ``a8_winsorize``,
 Usage: python tools/pandas_baseline.py [repeats] [SMALL_SF_DIR LARGE_SF_DIR]
 
 (default sf0.01 and sf0.1; a 10x input for the second decade comes from
-``python tools/measure.py --inflate 10 --keep DIR``).
+``python tools/measure.py --inflate 10 --keep DIR``). Spark runs in
+``tools/measure.py``'s session on every core this process may use.
 """
 
 from __future__ import annotations
@@ -44,7 +45,7 @@ sys.path.insert(0, ".")
 
 from temporai_mivdp_spark.queries import QUERIES  # noqa: E402
 import temporai_mivdp_spark.queries_llm  # noqa: E402,F401
-from temporai_mivdp_spark.session import get_session  # noqa: E402
+from measure import HOST_CORES, session  # noqa: E402
 
 _WS = re.compile(r"\s+")
 
@@ -195,17 +196,7 @@ def main() -> None:
         }
 
     names = list(pandas_cases(sfs[0]))
-    spark = get_session(
-        app_name="mivdp-pandas-baseline",
-        master="local[32]",
-        shuffle_partitions=32,
-        extra_conf={
-            "spark.ui.enabled": "false",
-            "spark.driver.memory": "16g",
-            "spark.ui.showConsoleProgress": "false",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session(HOST_CORES)
     spark_dfs = {
         (name, sf): QUERIES[name](spark, sf)
         for name in names

@@ -15,7 +15,9 @@ the TRAILING dimension only — the case lexicographic clustering cannot
 prune at all.
 
 Usage: python tools/scan_pruning.py [n_files] [repeats]
-Output: a markdown table (pasted into SCALING.md).
+Output: a markdown table (pasted into SCALING.md). The scans are timed by
+``tools/measure.py``'s ``time_queries`` in its session, on every core
+this process may use.
 """
 
 from __future__ import annotations
@@ -23,7 +25,6 @@ from __future__ import annotations
 import shutil
 import sys
 import tempfile
-import time
 from pathlib import Path
 
 sys.path.insert(0, ".")
@@ -31,12 +32,12 @@ sys.path.insert(0, ".")
 import pyarrow.parquet as pq  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from measure import HOST_CORES, session, time_queries  # noqa: E402
 from temporai_mivdp_spark.operators.layout import (  # noqa: E402
     cluster_for_scan,
     quantize_uniform,
     zorder_key,
 )
-from temporai_mivdp_spark.session import get_session  # noqa: E402
 from temporai_mivdp_spark.sources import load_table  # noqa: E402
 
 BASE_SF = "/root/testdata/sf0.1"
@@ -66,30 +67,12 @@ def rowgroups_must_read(path: str, bounds: dict[str, tuple]) -> tuple[int, int]:
     return must, total
 
 
-def timed(df, repeats: int) -> float:
-    best = float("inf")
-    for _ in range(repeats):
-        t0 = time.time()
-        df.write.format("noop").mode("overwrite").save()
-        best = min(best, time.time() - t0)
-    return best
-
-
 def main() -> None:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     n_files = int(args[0]) if args else 64
     repeats = int(args[1]) if len(args) > 1 else 3
 
-    spark = get_session(
-        app_name="mivdp-scan-pruning",
-        master="local[32]",
-        shuffle_partitions=32,
-        extra_conf={
-            "spark.ui.enabled": "false",
-            "spark.ui.showConsoleProgress": "false",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session(HOST_CORES)
 
     li = load_table(spark, BASE_SF, "lineitem")
     pk_hi = li.agg(F.max("l_partkey")).collect()[0][0]
@@ -128,22 +111,29 @@ def main() -> None:
          F.col("l_suppkey").between(s_lo, s_hi)),
     ]
 
+    def scan(path, pred):
+        return lambda spark, sf: (
+            spark.read.parquet(path)
+            .filter(pred)
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.round(F.col("l_extendedprice") * 100, 0).cast("long")).alias("s"),
+            )
+        )
+
     print(f"| layout | predicate | rowgroups must-read | scan s (best of {repeats}) |")
     print("|---|---|---|---|")
     try:
+        fns = {
+            (lname, cname): scan(f"{tmp}/{lname}", pred)
+            for lname in layouts
+            for cname, _, pred in cases
+        }
+        recs = time_queries(spark, fns, BASE_SF, repeats)
         for lname in layouts:
-            path = f"{tmp}/{lname}"
-            for cname, bounds, pred in cases:
-                must, total = rowgroups_must_read(path, bounds)
-                scan = (
-                    spark.read.parquet(path)
-                    .filter(pred)
-                    .agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.sum(F.round(F.col("l_extendedprice") * 100, 0).cast("long")).alias("s"),
-                    )
-                )
-                t = timed(scan, repeats)
+            for cname, bounds, _ in cases:
+                must, total = rowgroups_must_read(f"{tmp}/{lname}", bounds)
+                t = recs[(lname, cname)]["exec_min_s"]
                 print(f"| {lname} | {cname} | {must}/{total} | {t:.3f} |")
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
