@@ -42,7 +42,9 @@ same merges, same counts. Tested under repartition(1) vs repartition(64).
 from __future__ import annotations
 
 from collections import Counter, defaultdict
+from collections.abc import Sequence
 from functools import lru_cache
+from typing import TYPE_CHECKING
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -50,6 +52,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from temporai_mivdp_spark.llmdata.dedup import normalize_text, tokenize
+from temporai_mivdp_spark.session import arrow_rows
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 __all__ = [
     "train_bpe",
@@ -191,12 +197,7 @@ def train_bpe(
     )
     wc = {r["token"]: int(r["count"]) for r in counts.collect()}
     merges = _train_merges(wc, num_merges)
-    spark = docs.sparkSession
-    rows = [(i, a, b) for i, (a, b) in enumerate(merges)]
-    schema = "rank: int, left: string, right: string"
-    if not rows:
-        return spark.createDataFrame([], schema)
-    return spark.createDataFrame(rows, schema)
+    return docs.sparkSession.createDataFrame(_merge_table(merges))
 
 
 @lru_cache(maxsize=8)
@@ -221,11 +222,28 @@ def pretrained_merges_list(num_merges: int = 300) -> tuple[tuple[str, str], ...]
     return tuple(merges)
 
 
+def _merge_table(merges: Sequence[tuple[str, str]]) -> pa.Table:
+    """``merges`` as the ``(rank, left, right)`` Arrow table that
+    ``createDataFrame`` plans as a ``LocalTableScan`` (no Python worker
+    at execution; see ``session.arrow_rows``)."""
+    import pyarrow as pa
+
+    schema = pa.schema(
+        [("rank", pa.int32()), ("left", pa.string()), ("right", pa.string())]
+    )
+    return arrow_rows(((i, a, b) for i, (a, b) in enumerate(merges)), schema)
+
+
+@lru_cache(maxsize=8)
+def _pretrained_table(num_merges: int) -> pa.Table:
+    return _merge_table(pretrained_merges_list(num_merges))
+
+
 def pretrained_merges(spark: SparkSession, num_merges: int = 300) -> DataFrame:
     """The pretrained merge table as the standard ``(rank, left, right)``
-    dimension DataFrame ``train_bpe`` produces."""
-    rows = [(i, a, b) for i, (a, b) in enumerate(pretrained_merges_list(num_merges))]
-    return spark.createDataFrame(rows, "rank: int, left: string, right: string")
+    dimension DataFrame ``train_bpe`` produces, from an Arrow table built
+    once per process."""
+    return spark.createDataFrame(_pretrained_table(num_merges))
 
 
 @lru_cache(maxsize=8)

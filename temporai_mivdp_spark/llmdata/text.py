@@ -12,12 +12,17 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 from functools import lru_cache
+from typing import TYPE_CHECKING
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from temporai_mivdp_spark.llmdata.dedup import normalize_text, tokenize
+from temporai_mivdp_spark.session import arrow_rows
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 #: tiny marker lexicons for the n-gram/stopword language heuristic —
 #: enough to separate corpora at scale; swap for fastText offline models
@@ -917,19 +922,21 @@ def trigram_score_tables(top_k_per_lang: int = TRIGRAM_TOP_K) -> dict[str, dict[
 
 
 @lru_cache(maxsize=8)
-def _trigram_weight_rows(
-    top_k_per_lang: int,
-) -> tuple[tuple[str, ...], tuple[tuple[str, list[int]], ...]]:
-    """``(langs, rows)`` for ``language_id_ngram``'s broadcast dimension:
-    the sorted language list and one ``(trigram, weights in langs
-    order)`` row per shared feature. Derived from
+def _trigram_weight_table(top_k_per_lang: int) -> tuple[tuple[str, ...], pa.Table]:
+    """``(langs, table)`` for ``language_id_ngram``'s broadcast dimension:
+    the sorted language list and an Arrow table with one ``(__g trigram,
+    __w weights in langs order)`` row per shared feature. Derived from
     ``trigram_score_tables`` once per process (like
     ``bpe.pretrained_merges_list``) — the tables are a pure function of
     the in-repo samples, and re-deriving them cost every call ~0.2 s."""
+    import pyarrow as pa
+
     tables = trigram_score_tables(top_k_per_lang)
     langs = tuple(sorted(tables))
     feats = sorted(next(iter(tables.values())))
-    return langs, tuple((g, [tables[lang][g] for lang in langs]) for g in feats)
+    schema = pa.schema([("__g", pa.string()), ("__w", pa.list_(pa.int32()))])
+    rows = ((g, [tables[lang][g] for lang in langs]) for g in feats)
+    return langs, arrow_rows(rows, schema)
 
 
 #: Unicode-script fallback for zero-feature docs (applied ONLY when no
@@ -970,8 +977,11 @@ def language_id_ngram(
     that ships once per executor via broadcast, NOT a plan literal
     repeated into every task binary (the round-4 4-language version
     inlined per-language maps; growing coverage grows the dimension
-    now, never the plan). Unmatched grams simply find no row — they
-    contributed exactly 0 under the shared-set scheme anyway.
+    now, never the plan). The dimension is a JVM-local relation
+    (``LocalTableScan`` over a per-process Arrow table), so building and
+    running it launches no Python worker. Unmatched grams simply find
+    no row — they contributed exactly 0 under the shared-set scheme
+    anyway.
     Prediction = argmax with (score desc, language asc) tie-break;
     weights are negative, so any matched trigram drives every score
     below zero and ``max(score) < 0`` is exactly "at least one feature
@@ -985,7 +995,7 @@ def language_id_ngram(
     Accuracy on the held-out samples beats the marker heuristic
     (asserted in tests); both tiers misroute languages outside the
     table, honestly — extend ``TRAIN_SAMPLES`` to grow coverage."""
-    langs, weight_rows = _trigram_weight_rows(top_k_per_lang)
+    langs, weights = _trigram_weight_table(top_k_per_lang)
     # Materialize the normalized text ONCE per row before the explode.
     # Passing the normalize expression itself into the transform lambda
     # re-evaluates the regexp_replace at EVERY trigram position —
@@ -1005,58 +1015,44 @@ def language_id_ngram(
             ).alias("__g"),
         )
     )
-    wdf = docs.sparkSession.createDataFrame(
-        weight_rows, "__g: string, __w: array<int>", verifySchema=False
-    )
+    # One SQL string per score column, one zero-fill call and one argmax
+    # string: nested F.* trees cost about three py4j round trips per
+    # Column node (a curation_gate build made 1,912 calls, now 693).
+    score_cols = [f"score_{lang}" for lang in langs]
     scores = (
-        grams.join(F.broadcast(wdf), "__g")
+        grams.join(F.broadcast(docs.sparkSession.createDataFrame(weights)), "__g")
         .groupBy(id_col)
         .agg(
             *[
-                F.sum(F.element_at("__w", i + 1).cast("long")).alias(
-                    f"score_{lang}"
-                )
-                for i, lang in enumerate(langs)
+                F.expr(f"sum(CAST(element_at(__w, {i + 1}) AS BIGINT)) AS {c}")
+                for i, c in enumerate(score_cols)
             ]
         )
     )
-    base = docs.select(id_col, F.col(text_col).alias("__t"), *passthrough).join(
-        scores, id_col, "left"
+    base = (
+        docs.select(id_col, F.col(text_col).alias("__t"), *passthrough)
+        .join(scores, id_col, "left")
+        .na.fill(0, subset=score_cols)
     )
-    filled = [
-        F.coalesce(F.col(f"score_{lang}"), F.lit(0).cast("long")).alias(
-            f"score_{lang}"
-        )
-        for lang in langs
-    ]
-    base = base.select(id_col, "__t", *passthrough, *filled)
     # argmax via struct greatest: score desc; ties -> alphabetically
     # first language (nl is the reverse-alphabetical index, so the
     # alphabetically-first language carries the HIGHEST nl and wins the
     # fieldwise comparison on equal scores)
-    rev = sorted(langs, reverse=True)
-    best = F.greatest(
-        *[
-            F.struct(
-                F.col(f"score_{lang}").alias("s"),
-                F.lit(i).alias("nl"),
-                F.lit(lang).alias("lang"),
-            )
-            for i, lang in enumerate(rev)
-        ]
-    )
-    fallback = F.lit("und")
-    for lang, pattern in reversed(SCRIPT_FALLBACK):
-        fallback = F.when(F.col("__t").rlike(pattern), F.lit(lang)).otherwise(
-            fallback
+    best = "greatest({})".format(
+        ", ".join(
+            f"named_struct('s', score_{lang}, 'nl', {i}, 'lang', '{lang}')"
+            for i, lang in enumerate(sorted(langs, reverse=True))
         )
-    pred = F.when(best["s"] < 0, best["lang"]).otherwise(fallback)
-    return base.select(
-        id_col,
-        *passthrough,
-        pred.alias("lang_pred"),
-        *[F.col(f"score_{lang}") for lang in langs],
     )
+    fallback = " ".join(
+        f"WHEN __t RLIKE '{pattern}' THEN '{lang}'" for lang, pattern in SCRIPT_FALLBACK
+    )
+    pred = (
+        f"CASE WHEN {best}.s < 0 THEN {best}.lang"
+        f" ELSE CASE {fallback} ELSE 'und' END END AS lang_pred"
+    )
+    carried = ["`" + c.replace("`", "``") + "`" for c in (id_col, *passthrough)]
+    return base.selectExpr(*carried, pred, *score_cols)
 
 
 def fingerprint(

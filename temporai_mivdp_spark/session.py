@@ -14,13 +14,25 @@ we tune instead is the optimizer/runtime surface that matters at 100 TB:
   AQE coalescing from a high initial value.
 * Explicit UTC session timezone so timestamp semantics match the DuckDB
   oracle and are stable across clusters.
+* A generated-class cache that holds a session's working set. Spark's
+  default of 100 entries is below every pass we run: a cold
+  ``llm_curation`` benchmark pass compiles 132 classes and a cold
+  ``icu_pipeline`` pass 120, so each warm pass compiled 87-124 of them
+  again. The streaming ingest twin re-plans ``curation_gate`` on every
+  micro-batch and hit the same thrash. Sizes and measurements sit next
+  to the confs.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable
 from contextlib import contextmanager
+from typing import TYPE_CHECKING
 
 from pyspark.sql import SparkSession
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 #: Confs applied to every session this engine creates. Values chosen for
 #: determinism + scale; all are overridable via ``extra_conf``.
@@ -61,6 +73,22 @@ DEFAULT_CONFS: dict[str, str] = {
     # construction pays it per expression. Off, errors only lose that
     # Python call site.
     "spark.python.sql.dataFrameDebugging.enabled": "false",
+    # Generated-class cache, JVM-wide and static (fixed when the first
+    # session starts). At Spark's default 100 entries the LRU evicted each
+    # class before its next use: warm perfbench passes recompiled 122-124
+    # (llm_curation) and 87 (icu_pipeline) classes, and a bench.py run
+    # compiled 2,490 classes in all. At 1000 warm passes compile none and
+    # a bench.py run compiles 393. A class averages 2.5 KB of bytecode;
+    # Metaspace after a bench.py run went from 179.8 to 182.5 MB.
+    "spark.sql.codegen.cache.maxEntries": "1000",
+    # The cache key is the generated source, and by default a whole-stage
+    # class is named after its codegen stage id. AQE numbers the stages it
+    # re-plans in the order their inputs finish, so the same plan could
+    # get new ids on a later run and miss the cache (4-12 recompiles in
+    # some warm llm_curation passes). Without the id, identical stages
+    # share one class (a cold llm_curation pass compiles 121, not 132);
+    # only the name in a stack trace loses the id.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 
@@ -109,6 +137,22 @@ def job_description(spark: SparkSession, label: str):
         yield
     finally:
         sc.setLocalProperty("spark.job.description", prev)
+
+
+def arrow_rows(rows: Iterable[tuple], schema: pa.Schema) -> pa.Table:
+    """Driver-side ``rows`` (tuples in ``schema`` field order) as an Arrow
+    table. ``spark.createDataFrame(table)`` plans it as a JVM-local
+    ``LocalTableScan`` that runs no Python worker. The same rows passed
+    as a list plan ``Scan ExistingRDD`` over a Python RDD instead, and
+    PySpark's reserializing ``map`` on that RDD starts Python-worker
+    tasks on every execution. Callers whose rows are constant memoize
+    the table once per process."""
+    import pyarrow as pa
+
+    cols = list(zip(*rows)) or [() for _ in schema]
+    return pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema
+    )
 
 
 def get_test_session(cpus: int = 4) -> SparkSession:

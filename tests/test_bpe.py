@@ -300,6 +300,25 @@ def test_oracle_recursive_cte_matches_kernel_worst_case_runs(seed):
         assert got[w] == len(bpe.apply_merges_py(w, ranks)), w
 
 
+def test_merge_tables_are_local_relations(spark):
+    """Both merge-table constructors plan a JVM LocalTableScan: a frame
+    built from a Python row list plans ``Scan ExistingRDD``, whose
+    reserializing map starts Python-worker tasks on every execution."""
+    from temporai_mivdp_spark.plans import executed_plan
+
+    docs = spark.createDataFrame([(1, "banana bandana band")], "doc_id long, text string")
+    empty = spark.createDataFrame([], "doc_id long, text string")
+    pretrained = bpe.pretrained_merges(spark)
+    for merges in (pretrained, bpe.train_bpe(docs, 5), bpe.train_bpe(empty, 5)):
+        plan = executed_plan(merges)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+        assert merges.columns == ["rank", "left", "right"]
+        assert merges.dtypes == [("rank", "int"), ("left", "string"), ("right", "string")]
+    assert [(r.rank, (r.left, r.right)) for r in pretrained.collect()] == list(
+        enumerate(bpe.pretrained_merges_list())
+    )
+
+
 def test_oracle_recursive_cte_matches_kernel_pretrained_table():
     """Same replay under the real pretrained table on real-ish words,
     including accented (multibyte) symbols from the multilingual seed."""

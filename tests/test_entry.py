@@ -11,6 +11,10 @@ from tests.conftest import SF_SMOKE
 def test_entry_returns_rows(spark):
     # PySpark's per-call stack capture is off in every engine session
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    # the generated-class cache holds a warm pass's working set, keyed
+    # by source that does not depend on AQE's stage numbering
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+    assert spark.conf.get("spark.sql.codegen.useIdInClassName") == "false"
     df = entrymod.entry(spark)
     assert df.count() > 0
 

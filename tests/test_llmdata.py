@@ -688,6 +688,49 @@ def test_curation_gate_one_row_per_input_row(spark):
     assert len(pooled) == 1
 
 
+def test_language_id_ngram_weights_are_a_local_relation(spark, gate_docs):
+    """The trigram weight dimension is a JVM-local relation: the plan
+    reads it from a LocalTableScan, not from a Python RDD (whose
+    reserializing map started Python-worker tasks on every execution)."""
+    from temporai_mivdp_spark.plans import executed_plan
+
+    plan = executed_plan(text.language_id_ngram(gate_docs))
+    assert "LocalTableScan [__g" in plan and "ExistingRDD" not in plan, plan
+
+
+def test_warm_curation_pass_compiles_no_class(spark, tmp_path):
+    """The five llm_curation steps (exact duplicates, Jaccard pairs,
+    clusters, representatives, curation gate), run twice: the second
+    pass takes every generated class from the codegen cache. With
+    Spark's default 100-entry cache, one pass's ~130 classes evicted
+    each other and every pass recompiled more than 100 of them."""
+    from perfbench import gen
+    from temporai_mivdp_spark.llmdata import pipeline
+
+    gen.curation_corpus(str(tmp_path / "in"), 0, 120, 10)
+    corpus = spark.read.parquet(str(tmp_path / "in" / "corpus.parquet"))
+    steps = [
+        ("exact", lambda o: dedup.exact_duplicates(corpus)),
+        ("pairs", lambda o: dedup.ngram_jaccard_pairs(corpus, n=3, threshold=0.5)),
+        ("clusters", lambda o: dedup.duplicate_clusters(o["pairs"])),
+        ("kept", lambda o: dedup.keep_representatives(corpus, o["clusters"])),
+        ("gated", lambda o: pipeline.curation_gate(o["kept"])),
+    ]
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics  # noqa: SLF001
+    compiled = metrics.METRIC_COMPILATION_TIME()
+
+    def one_pass(k: int) -> int:
+        c0, outs = compiled.getCount(), {}
+        for key, build in steps:
+            path = str(tmp_path / f"out{k}" / key)
+            build(outs).write.parquet(path)
+            outs[key] = spark.read.parquet(path)
+        return compiled.getCount() - c0
+
+    assert one_pass(0) > 0
+    assert one_pass(1) == 0
+
+
 def test_count_occurrences_consecutive_tokens(spark):
     df = spark.createDataFrame([(1, "the the the cat")], "doc_id: long, text: string")
     out = text.language_id(df).collect()[0]

@@ -37,6 +37,9 @@ def test_measure_inflated_core_sweep(tmp_path):
         assert r["query"] == "a2_two_level_agg" and r["inflate"] == 2
         assert r["build_s"] > 0 and 0 < r["exec_min_s"] <= r["exec_median_s"]
         assert r["rows"] > 0 and len(r["hash"]) == 16
+        # classes compiled during the fastest execution (0 once the
+        # codegen cache holds the query's classes)
+        assert isinstance(r["codegen_classes"], int) and r["codegen_classes"] >= 0
         s = r["stages"]
         assert s["jobs"] >= 1 and s["tasks"] >= 1 and s["task_s"] > 0
         assert {"cpu_s", "shuffle_mb", "spill_mb", "peak_task_mem_mb"} <= set(s)

@@ -35,11 +35,14 @@ the first is ``{"inflate": K, "tables": {name: {"base_rows", "rows"}}}``;
 then one record per (query, cores)::
 
     {"query", "cores", "sf", "inflate", "build_s", "exec_min_s", "exec_median_s",
-     "exec_s": [samples], "rows", "hash",
+     "exec_s": [samples], "rows", "hash", "codegen_classes",
      "stages": {"jobs", "stages", "tasks", "task_s", "cpu_s",
                 "shuffle_mb", "spill_mb", "peak_task_mem_mb"}}
 
-``stages`` sums the stage metrics of the fastest timed execution
+``codegen_classes`` and ``stages`` describe the fastest timed execution:
+the number of classes Janino compiled during it (Spark's
+``CodegenMetrics`` compilation count; 0 when every generated class came
+from the codegen cache), and the sum of its stage metrics
 (``task_s``/``cpu_s`` are executor run and CPU time over all its tasks;
 ``peak_task_mem_mb`` is the largest single task's peak execution
 memory). A markdown summary table goes to stderr.
@@ -216,6 +219,9 @@ def time_queries(spark, fns: dict, sf: str, repeats: int) -> dict[str, dict]:
 
     store = StatusStore(spark)
     cores = spark.sparkContext.defaultParallelism
+    # counts one update per class Janino compiles (a codegen-cache miss)
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = metrics.METRIC_COMPILATION_TIME()
 
     def noop(df) -> None:
         df.write.format("noop").mode("overwrite").save()
@@ -228,15 +234,16 @@ def time_queries(spark, fns: dict, sf: str, repeats: int) -> dict[str, dict]:
         dfs[q] = fn(spark, sf)
         build[q] = time.perf_counter() - t0
     samples = {q: [] for q in fns}
-    stages = {}
+    stages, classes = {}, {}
     for _ in range(repeats):
         for q, df in dfs.items():
-            first = store.next_job_id()
+            first, c0 = store.next_job_id(), compiled.getCount()
             t0 = time.perf_counter()
             noop(df)
             dt = time.perf_counter() - t0
             if dt <= min(samples[q], default=dt):
                 stages[q] = stage_totals(store, first)
+                classes[q] = compiled.getCount() - c0
             samples[q].append(dt)
     recs = {}
     for q, df in dfs.items():
@@ -247,7 +254,8 @@ def time_queries(spark, fns: dict, sf: str, repeats: int) -> dict[str, dict]:
             "exec_min_s": round(min(samples[q]), 3),
             "exec_median_s": round(statistics.median(samples[q]), 3),
             "exec_s": [round(s, 3) for s in samples[q]],
-            "rows": rows, "hash": digest, "stages": stages[q],
+            "rows": rows, "hash": digest, "codegen_classes": classes[q],
+            "stages": stages[q],
         }
     return recs
 

@@ -29,8 +29,8 @@ from pyspark.sql import functions as F  # noqa: E402
 from temporai_mivdp_spark.mivdp import cohort as coh  # noqa: E402
 from temporai_mivdp_spark.mivdp import datagen as dg  # noqa: E402
 from temporai_mivdp_spark.mivdp import features as feat  # noqa: E402
-from temporai_mivdp_spark.session import get_session  # noqa: E402
 from temporai_mivdp_spark.sources import write_parquet  # noqa: E402
+from measure import HOST_CORES, session  # noqa: E402
 
 
 def synth_inputs(spark, n_subjects: int = 200, seed: int = 42):
@@ -112,9 +112,7 @@ def main() -> None:
     n_subjects = int(sys.argv[2]) if len(sys.argv) > 2 else 200
     include_time, pred_w, bucket = 24, 6, 2
 
-    spark = get_session(app_name="mivdp-pipeline", master="local[8]", shuffle_partitions=16,
-                        extra_conf={"spark.ui.enabled": "false"})
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session(HOST_CORES)
     t = synth_inputs(spark, n_subjects)
 
     # --- EP-1: labeled cohort (mortality) ---
