@@ -30,10 +30,11 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2.
 
-    Ordered so the driver's 50-entry check window covers the least-proven
-    entries first; the ``WINDOW_TAIL`` keys (longest-stable granular rows,
-    re-verified locally each round) register last. See COVERAGE.md
-    "Catalog window policy".
+    Ordered so the driver's 50-entry check window covers the least
+    recently driver-green entries first: the sort key is the round of
+    each entry's last green row in the committed ``CORRECTNESS_r*.json``
+    (never green sorts first), newest-registered first among equals. See
+    COVERAGE.md "Catalog window policy".
     """
     return window_ordered(QUERIES)
 

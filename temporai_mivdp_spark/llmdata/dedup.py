@@ -501,33 +501,6 @@ def ngram_jaccard_pairs(
     return jac.filter(F.col("jaccard") >= threshold).select("id_a", "id_b", "jaccard")
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    num_hashes: int = 16,
-    shingle_n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """MinHash signatures over word ``shingle_n``-gram shingles, long
-    format (id, h_idx, minhash).
-
-    Shingles, not unigrams: documents drawn from a shared vocabulary have
-    hugely overlapping unigram SETS (Jaccard ~1 even for unrelated docs),
-    which would make every LSH band collide; n-gram shingles keep
-    unrelated docs near Jaccard 0. Each of the ``num_hashes`` functions is
-    md5 seeded by the hash index, so signatures are deterministic and
-    engine-portable. One explode + groupBy — shingle sets never leave
-    their partition unaggregated.
-    """
-    wide = _minhash_wide(
-        docs, num_hashes=num_hashes, shingle_n=shingle_n, text_col=text_col, id_col=id_col
-    )
-    stack_args = ", ".join(f"{i}, __m{i}" for i in range(num_hashes))
-    return wide.selectExpr(
-        id_col, f"stack({num_hashes}, {stack_args}) AS (h_idx, minhash)"
-    )
-
-
 def _minhash_wide(
     docs: DataFrame,
     num_hashes: int = 16,
@@ -537,8 +510,11 @@ def _minhash_wide(
 ) -> DataFrame:
     """Wide MinHash: one row per doc, columns __m0..__m{k-1}.
 
-    All ``num_hashes`` permutations are plain affine column expressions of
-    the one md5-based shingle hash, aggregated as k ``min()`` columns in a
+    Over word ``shingle_n``-gram shingles, not unigrams: documents drawn
+    from a shared vocabulary have near-identical unigram SETS, which
+    would make every LSH band collide. All ``num_hashes`` permutations
+    are plain affine column expressions of the one md5-based shingle
+    hash, aggregated as k ``min()`` columns in a
     SINGLE groupBy(id) — fully map-side combined, whole-stage codegen'd.
     The earlier long-format plan exploded every shingle ``num_hashes``x
     and shuffled (id, h_idx) pairs; this shuffles one k-long row per doc

@@ -29,6 +29,8 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from temporai_mivdp_spark.session import arrow_rows
+
 #: hash buckets for split/sample decisions — 10k gives 0.01% rate
 #: granularity while keeping the arithmetic in exact integers
 _BUCKETS = 10_000
@@ -192,9 +194,11 @@ def stratified_hash_sample(
     stratum rate, so resampling with a higher rate is a superset of the
     lower-rate sample — handy for curriculum re-runs.
     """
-    spark = df.sparkSession
-    rate_rows = [(k, float(v)) for k, v in rates.items()]
-    rate_df = spark.createDataFrame(rate_rows, f"{strata_col}: string, __rate: double")
+    import pyarrow as pa
+
+    schema = pa.schema([(strata_col, pa.string()), ("__rate", pa.float64())])
+    rate_rows = ((k, float(v)) for k, v in rates.items())
+    rate_df = df.sparkSession.createDataFrame(arrow_rows(rate_rows, schema))
     out = df.join(F.broadcast(rate_df), strata_col, "left")
     keep = _hash_bucket(F.col(key_col), seed) < (
         F.coalesce(F.col("__rate"), F.lit(default_rate)) * _BUCKETS

@@ -33,6 +33,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from temporai_mivdp_spark.session import arrow_rows
+
 
 def _dot(a: Column, b: Column) -> Column:
     """Dot product of two float-array columns in double (HOF fold).
@@ -621,10 +623,10 @@ def kmeans_fit(
         cur = nxt
         if shift < tol:
             break
-    out = spark.createDataFrame(
-        [(cid, vec) for cid, vec in sorted(cur.items())],
-        schema=f"centroid_id long, {vec_col} array<double>",
-    )
+    import pyarrow as pa
+
+    schema = pa.schema([("centroid_id", pa.int64()), (vec_col, pa.list_(pa.float64()))])
+    out = spark.createDataFrame(arrow_rows(sorted(cur.items()), schema))
     return out, history
 
 

@@ -17,7 +17,9 @@ paths genuinely differ (percentile interpolation in a8).
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -55,238 +57,50 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Driver-window ordering policy — codified as an INVARIANT in round 11.
-#
-# The driver hash-checks only the FIRST 50 entries ``queries()`` returns;
-# the catalog holds 99. Rounds 6-10 rotated entries in and out by hand
-# with per-entry coverage arguments (see git history of this block and
-# COVERAGE.md "Catalog window policy"); the round-10 verdict asked for
-# the rotation to become a standing rule instead of a per-round judgment
-# call. The rule, pinned by
-# tests/test_entry.py::test_window_rotation_invariant:
-#
-#   Every registered key must either sit INSIDE the 50-key head window
-#   this round, or carry a driver-green row no older than the PREVIOUS
-#   round (LAST_DRIVER_ROUND[key] >= CURRENT_ROUND - 1).
-#
-# Once the current round's driver run lands, every key therefore has
-# driver evidence at most two rounds old. With 99 keys and a 50-key
-# window this forces the natural alternation: the head is exactly the
-# keys absent from the previous round's window (49 of them) plus one
-# filler from the previous window — chosen as the newest / least-proven
-# entry, per the standing "newest faces the hard signal" policy.
-#
-# Round 13 instantiation: the head is exactly the 49 keys whose last
-# driver-green row is CORRECTNESS_r11.json (they sat in the r12 tail —
-# including a8_winsorize / embed_kmeans / sim_topk_ivf / the dedup_exact
-# family, whose round-12 library rewrites the r12 verdict explicitly
-# asked the driver to re-confirm), plus dedup_image_phash (newest
-# catalog entry, per the standing newest-faces-the-hard-signal policy)
-# as the 50th. The tail below is exactly the other 49 keys — every one
-# driver-green in CORRECTNESS_r12.json, the round-8 "driver-green is
-# the promotion-out currency" rule applied uniformly. r12 ∪ r13 windows
-# again cover all 99 entries (intersection = dedup_image_phash).
-# Expression changes still reset proven-ness: any
-# entry whose Spark expression or oracle changes in-round must re-enter
-# the head regardless of currency (the rule that kept the media
-# roundtrips in-window through their lattice changes).
-#
-# This is an ordering policy, NOT a subsumption claim — tail entries
-# stay registered with oracles and are re-verified every round via
-# tools/oracle_check.py (the exact command is test-pinned in
-# COVERAGE.md).
+# Driver-window ordering, derived from the driver's own artifacts. The
+# driver hash-checks only the FIRST 50 entries ``queries()`` returns; the
+# catalog holds 99. Sorting by the round of each key's last green driver
+# row (never green first), newest-registered first within a round, makes
+# each round's head the keys the previous round did not check plus the
+# newest entry, so no key's green row is more than one round stale once
+# that round's artifact lands. A new entry has no green row, so it faces
+# the driver at once. Every entry keeps its oracle; tools/oracle_check.py
+# re-verifies the whole catalog locally.
 # ---------------------------------------------------------------------------
 
-#: The round this source tree is being built in. Bumped at the start of
-#: each round together with the LAST_DRIVER_ROUND refresh and the
-#: WINDOW_TAIL rotation; test_window_rotation_invariant fails the suite
-#: if the three drift apart.
-CURRENT_ROUND = 13
-
-#: key -> most recent round whose driver-produced CORRECTNESS_r{N}.json
-#: holds a fully green row (rows_match + schema_match + hash_match, no
-#: err). Maintained by hand at rotation time and cross-checked against
-#: the artifacts on disk by tests/test_entry.py::test_last_driver_round_
-#: matches_artifacts, so a stale or optimistic entry cannot survive a
-#: pytest run. ``None`` marks a key REGISTERED THIS ROUND: it has no
-#: artifact yet (and cannot), so the tests instead require it to sit
-#: inside the driver window — the provision that makes adding a new
-#: catalog entry mid-round possible at all.
-LAST_DRIVER_ROUND: dict[str, int | None] = {
-    "a1_a6_group_counts": 11,
-    "a2_two_level_agg": 12,
-    "a3_conditional_count": 11,
-    "a4_group_max_nanmean": 12,
-    "a5_a10_summary_counts": 11,
-    "a7_mode_vote_filter": 11,
-    "a8_winsorize": 11,
-    "a9_group_mean_impute": 11,
-    "a_salted_skew": 11,
-    "dedup_duplicate_clusters": 11,
-    "dedup_embedding_neardup": 11,
-    "dedup_exact": 11,
-    "dedup_image_phash": 12,
-    "dedup_incremental": 12,
-    "dedup_minhash_lsh": 11,
-    "dedup_ngram_jaccard": 12,
-    "dedup_semantic": 12,
-    "dedup_simhash": 11,
-    "dedup_span_coverage": 12,
-    "dsir_gumbel": 12,
-    "dsir_select": 11,
-    "embed_kmeans": 11,
-    "f13_json_extract": 12,
-    "f_scalar_suite": 11,
-    "flagship_revenue_by_nation": 12,
-    "ingest_jsonl": 11,
-    "j4_dictionary_join": 12,
-    "j6_right_merge_summary": 12,
-    "j7_lookup_first_match": 11,
-    "j8_interval_exists_label": 11,
-    "j_asof_event_value": 12,
-    "j_interval_overlap": 11,
-    "j_range_bucketed": 11,
-    "layout_compaction": 11,
-    "multimodal_audio_roundtrip": 12,
-    "multimodal_frame_sampling": 12,
-    "multimodal_image_roundtrip": 12,
-    "multimodal_metadata": 11,
-    "multimodal_video_roundtrip": 12,
-    "o_sort_topk_first": 11,
-    "olap_rollup": 11,
-    "p2_derived_projection": 11,
-    "p3_p4_null_comparison_filter": 11,
-    "p5_semi_join_filter": 12,
-    "p6_string_match_filter": 11,
-    "p8_split_label_union": 12,
-    "pipeline_docs_curation": 12,
-    "pipeline_guard_corpus": 12,
-    "r1_r2_pivot_onehot": 12,
-    "r3_multilabel_onehot": 12,
-    "sample_source_quota": 11,
-    "sample_stratified": 12,
-    "sample_temperature": 12,
-    "sample_token_budget": 11,
-    "sample_weighted": 11,
-    "shard_assign": 12,
-    "sim_mean_vectors": 11,
-    "sim_topk_bruteforce": 11,
-    "sim_topk_ivf": 11,
-    "sim_topk_lsh": 12,
-    "sketch_distinct": 12,
-    "sketch_overlap": 11,
-    "sketch_quantile": 11,
-    "sketch_quantile_merge": 11,
-    "split_leakage_safe": 12,
-    "stream_dedup_keys": 11,
-    "stream_enrich": 11,
-    "stream_ingest_curation": 12,
-    "stream_ingest_dedup": 12,
-    "stream_ingest_jsonl": 12,
-    "stream_interval_join": 12,
-    "stream_serve_topk": 12,
-    "stream_session_agg": 12,
-    "stream_sliding_bucket": 11,
-    "stream_tumbling_bucket": 12,
-    "text_bm25": 12,
-    "text_boilerplate": 11,
-    "text_bpe_count": 11,
-    "text_bpe_train": 12,
-    "text_chunk_overlap": 11,
-    "text_clean_redact": 11,
-    "text_encode_vocab": 11,
-    "text_gopher": 12,
-    "text_langid": 12,
-    "text_perplexity": 11,
-    "text_pmi": 12,
-    "text_quality": 12,
-    "text_quality_model": 12,
-    "text_quantile_norm": 12,
-    "text_repeated_spans": 11,
-    "text_tfidf": 11,
-    "ts_rolling_interp_peak": 12,
-    "ts_sessionize": 11,
-    "u1_u2_union_anti_grid": 11,
-    "w1_w2_hours_window_trim": 12,
-    "w3_tumbling_bucket": 12,
-    "w4_w8_dense_grid_indicator": 12,
-    "w5_w6_w7_impute_active": 12,
-    "window_ranking_family": 12,
-}
-
-#: Round-13 tail: exactly the 49 keys driver-green in CORRECTNESS_r12.json
-#: minus dedup_image_phash (the newest catalog entry stays in the head
-#: per the standing newest-faces-the-hard-signal policy). Order follows
-#: the r12 artifact's key order so diffs against it are trivial to
-#: audit. Uniform displacement rationale: a fresh r12 driver-green row
-#: IS the round-8 promotion-out currency; the head now holds every key
-#: whose evidence (last green r11) would otherwise age past the
-#: two-round invariant bound — including the round-12 library-rewrite
-#: consumers (a8_winsorize, embed_kmeans, sim_topk_ivf, dedup_exact
-#: family) the r12 verdict flagged for driver re-confirmation.
-WINDOW_TAIL: tuple[str, ...] = (
-    "flagship_revenue_by_nation",
-    "p5_semi_join_filter",
-    "p8_split_label_union",
-    "a2_two_level_agg",
-    "w1_w2_hours_window_trim",
-    "w3_tumbling_bucket",
-    "stream_tumbling_bucket",
-    "stream_session_agg",
-    "stream_interval_join",
-    "w4_w8_dense_grid_indicator",
-    "w5_w6_w7_impute_active",
-    "f13_json_extract",
-    "r1_r2_pivot_onehot",
-    "j6_right_merge_summary",
-    "r3_multilabel_onehot",
-    "a4_group_max_nanmean",
-    "j4_dictionary_join",
-    "ts_rolling_interp_peak",
-    "window_ranking_family",
-    "j_asof_event_value",
-    "dedup_ngram_jaccard",
-    "dedup_semantic",
-    "stream_serve_topk",
-    "text_quality",
-    "text_langid",
-    "pipeline_guard_corpus",
-    "sample_stratified",
-    "sample_temperature",
-    "split_leakage_safe",
-    "sim_topk_lsh",
-    "pipeline_docs_curation",
-    "dedup_span_coverage",
-    "stream_ingest_jsonl",
-    "shard_assign",
-    "dedup_incremental",
-    "stream_ingest_dedup",
-    "stream_ingest_curation",
-    "text_bpe_train",
-    "text_quantile_norm",
-    "text_gopher",
-    "dsir_gumbel",
-    "sketch_distinct",
-    "text_pmi",
-    "text_bm25",
-    "text_quality_model",
-    "multimodal_audio_roundtrip",
-    "multimodal_image_roundtrip",
-    "multimodal_video_roundtrip",
-    "multimodal_frame_sampling",
-)
+#: Driver-produced ``CORRECTNESS_r{N}.json`` files sit next to the package.
+_ARTIFACT_DIR = Path(__file__).resolve().parents[1]
 
 
-def window_ordered(mapping: dict) -> dict:
-    """Reorder a catalog dict so WINDOW_TAIL keys register last.
+def driver_artifacts() -> dict[int, dict]:
+    """round -> that round's driver rows (key -> row dict)."""
+    return {
+        int(p.stem.removeprefix("CORRECTNESS_r")): json.loads(p.read_text())
+        for p in _ARTIFACT_DIR.glob("CORRECTNESS_r*.json")
+    }
 
-    Registration order is otherwise preserved, so within the head the
-    newest entries (registered last in source) sit closest to the window
-    edge and the next displacement round can reason about recency.
-    """
-    head = {k: v for k, v in mapping.items() if k not in WINDOW_TAIL}
-    tail = {k: mapping[k] for k in WINDOW_TAIL if k in mapping}
-    return {**head, **tail}
+
+def last_green_rounds(artifacts: dict[int, dict]) -> dict[str, int]:
+    """key -> newest round whose row is green: no ``err`` and rows,
+    schema and hash all match."""
+    last: dict[str, int] = {}
+    for rnd, rows in sorted(artifacts.items()):
+        for key, row in rows.items():
+            if row.get("err") is None and all(
+                row.get(f) for f in ("rows_match", "schema_match", "hash_match")
+            ):
+                last[key] = rnd
+    return last
+
+
+def window_ordered(mapping: dict, last_green: dict[str, int] | None = None) -> dict:
+    """Reorder a catalog dict (in registration order) so the least
+    recently driver-green keys come first, newest-registered first among
+    equals; ``last_green`` defaults to the committed artifacts' rounds."""
+    if last_green is None:
+        last_green = last_green_rounds(driver_artifacts())
+    keys = sorted(reversed(list(mapping)), key=lambda k: last_green.get(k, 0))
+    return {k: mapping[k] for k in keys}
 
 
 # ---------------------------------------------------------------------------

@@ -53,145 +53,79 @@ def test_flagship_is_broadcast_joined(spark, name):
 
 
 def test_driver_window_prioritizes_least_proven_entries():
-    """The driver hash-checks only the first 50 registered entries.
-
-    Round-11 roster, derived (not hand-listed): the head must hold every
-    key whose driver evidence would otherwise age past the two-round
-    invariant bound — i.e. every key with no green row in the previous
-    round (LAST_DRIVER_ROUND < CURRENT_ROUND - 1) — plus fillers from the
-    previous window chosen newest-first (round 11: dedup_image_phash, one
-    green row). The tail is exactly WINDOW_TAIL and nothing is silently
-    dropped — queries() returns the full catalog with oracles in the same
-    order."""
+    """The driver hash-checks only the first 50 entries. On the committed
+    artifacts, every key outside that window has a green row from the
+    round before the current one (newest artifact + 1), the reorder drops
+    nothing, and the oracles come in the same order."""
     from temporai_mivdp_spark.queries import (
-        CURRENT_ROUND,
-        LAST_DRIVER_ROUND,
         QUERIES,
-        WINDOW_TAIL,
+        driver_artifacts,
+        last_green_rounds,
     )
 
+    artifacts = driver_artifacts()
+    assert artifacts, "no CORRECTNESS artifacts found"
+    current = max(artifacts) + 1
+    last_green = last_green_rounds(artifacts)
     keys = list(entrymod.queries())
-    assert len(keys) == len(QUERIES), "reorder must not drop entries"
-    window = set(keys[:50])
-    # None marks a key registered this round (no artifact yet) — those
-    # are pinned in-window by test_window_rotation_invariant; filter
-    # them here so the comparison stays int-vs-int.
-    must_face_driver = {
-        k
-        for k in keys
-        if LAST_DRIVER_ROUND[k] is not None
-        and LAST_DRIVER_ROUND[k] < CURRENT_ROUND - 1
-    }
-    assert must_face_driver <= window, must_face_driver - window
-    assert "dedup_image_phash" in window  # r11+r12 filler: newest entry
-    assert tuple(keys[len(keys) - len(WINDOW_TAIL):]) == WINDOW_TAIL
-    assert list(entrymod.oracle_sql()) == [
-        k for k in keys if k in entrymod.oracle_sql()
-    ]
+    assert sorted(keys) == sorted(QUERIES), "reorder must not drop entries"
+    stale = [k for k in keys[50:] if last_green.get(k, 0) < current - 1]
+    assert not stale, stale
+    assert list(entrymod.oracle_sql()) == keys
 
 
 def test_window_rotation_invariant():
-    """The round-11 codification of the rotation policy (the r10
-    verdict's #1 task): at registration time, every catalog key must
-    either sit inside the 50-key driver window for CURRENT_ROUND or
-    carry a driver-green row from the previous round — so once the
-    current round's driver run lands, no key's evidence is ever more
-    than two rounds old. A key that is neither in-window nor current
-    fails the suite by name."""
-    from temporai_mivdp_spark.queries import (
-        CURRENT_ROUND,
-        LAST_DRIVER_ROUND,
-        WINDOW_TAIL,
-    )
+    """Synthetic rows: an ``err`` row or a hash mismatch is not green, a
+    never-green key leads, and feeding round N's head back as green gives
+    round N+1 the keys round N left out plus the newest entry as filler.
+    2w - 1 keys with a w-key window is the catalog's 99/50 shape."""
+    from temporai_mivdp_spark.queries import last_green_rounds, window_ordered
 
-    keys = list(entrymod.queries())
-    window = set(keys[:50])
-    unknown = [k for k in keys if k not in LAST_DRIVER_ROUND]
-    assert not unknown, f"keys missing from LAST_DRIVER_ROUND: {unknown}"
-    # None marks a key REGISTERED THIS ROUND with no driver artifact yet;
-    # such a key must face the driver now, i.e. sit inside the window
-    # (without this provision no new entry could ever be added: it has
-    # no CORRECTNESS row, so any claimed round would fail the artifact
-    # cross-check below)
-    new_keys = [k for k, v in LAST_DRIVER_ROUND.items() if v is None]
-    outside = sorted(set(new_keys) - window)
-    assert not outside, f"new keys must enter the driver window: {outside}"
-    stale = [
-        k
-        for k in keys
-        if k not in window
-        and LAST_DRIVER_ROUND[k] is not None
-        and LAST_DRIVER_ROUND[k] < CURRENT_ROUND - 1
-    ]
-    assert not stale, (
-        "window-rotation invariant violated — these keys are outside the "
-        f"round-{CURRENT_ROUND} driver window with driver evidence older "
-        f"than round {CURRENT_ROUND - 1}: {sorted(stale)}"
-    )
-    # the map must not name retired keys either
-    gone = sorted(set(LAST_DRIVER_ROUND) - set(keys))
-    assert not gone, f"LAST_DRIVER_ROUND names unregistered keys: {gone}"
-    # and WINDOW_TAIL keys must all be current (they sit outside the
-    # window; a new/None key can never sit in the tail)
-    assert all(
-        LAST_DRIVER_ROUND[k] is not None
-        and LAST_DRIVER_ROUND[k] >= CURRENT_ROUND - 1
-        for k in WINDOW_TAIL
-    )
+    w = 5
+    catalog = {f"k{i}": i for i in range(2 * w - 1)}  # registration order
+    green = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
+    artifacts = {
+        1: {
+            **{f"k{i}": green for i in range(4)},
+            "k4": {**green, "err": "boom"},
+            "k5": {**green, "hash_match": False},
+        }
+    }
+    last_green = last_green_rounds(artifacts)
+    assert set(last_green) == {"k0", "k1", "k2", "k3"}
+    head = list(window_ordered(catalog, last_green))[:w]
+    assert head == ["k8", "k7", "k6", "k5", "k4"]  # never green, newest first
+    for rnd in range(2, 6):
+        artifacts[rnd] = {k: green for k in head}
+        keys = list(window_ordered(catalog, last_green_rounds(artifacts)))
+        assert sorted(keys) == sorted(catalog)
+        left_out = [k for k in reversed(catalog) if k not in head]
+        assert keys[:w] == left_out + ["k8"], (rnd, keys[:w])
+        head = keys[:w]
 
 
-def test_last_driver_round_matches_artifacts():
-    """LAST_DRIVER_ROUND is maintained by hand at rotation time; this
-    cross-checks it against the driver-produced CORRECTNESS_r*.json
-    artifacts so a stale or optimistic entry cannot survive a pytest
-    run. A row counts as green only when rows/schema/hash all match and
-    err is null — the same bar the verdicts apply."""
+def test_queries_order_independent_of_cwd(tmp_path):
+    """The artifacts are found next to the package, not in the cwd."""
     import json
-    import re
+    import os
+    import subprocess
+    import sys
     from pathlib import Path
 
-    from temporai_mivdp_spark.queries import CURRENT_ROUND, LAST_DRIVER_ROUND
-
     root = Path(__file__).resolve().parents[1]
-    derived: dict[str, int] = {}
-    rounds_seen = []
-    for p in sorted(root.glob("CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"r(\d+)", p.name).group(1))
-        # artifacts from CURRENT_ROUND onward may land mid-round (the
-        # driver writes them after this tree is judged); the hand map
-        # records the state AT rotation time, so ignore them here
-        if rnd >= CURRENT_ROUND:
-            continue
-        rounds_seen.append(rnd)
-        for k, v in json.loads(p.read_text()).items():
-            if (
-                isinstance(v, dict)
-                and v.get("err") is None
-                and v.get("rows_match")
-                and v.get("schema_match")
-                and v.get("hash_match", True)
-            ):
-                derived[k] = max(derived.get(k, 0), rnd)
-    assert rounds_seen, "no CORRECTNESS artifacts found"
-    derived = {k: r for k, r in derived.items() if k in LAST_DRIVER_ROUND}
-    mism = {
-        k: (LAST_DRIVER_ROUND[k], derived[k])
-        for k in derived
-        if LAST_DRIVER_ROUND[k] is not None and LAST_DRIVER_ROUND[k] != derived[k]
-    }
-    assert not mism, f"LAST_DRIVER_ROUND disagrees with artifacts: {mism}"
-    # None-valued keys are new this round (no artifact CAN exist yet;
-    # the rotation test pins them inside the window instead); every key
-    # CLAIMING a round must have that green artifact row
-    claiming = {k for k, v in LAST_DRIVER_ROUND.items() if v is not None}
-    missing = sorted(claiming - set(derived))
-    assert not missing, (
-        f"LAST_DRIVER_ROUND claims rounds for keys with no green artifact row: {missing}"
+    out = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "import json, __spark_entry__ as e; print(json.dumps(list(e.queries())))",
+        ],
+        cwd=tmp_path,
+        env={**os.environ, "PYTHONPATH": str(root)},
+        capture_output=True,
+        text=True,
+        check=True,
     )
-    # and a key that HAS a green artifact row must not hide behind None
-    # (the sentinel is for genuinely new keys only)
-    hiding = sorted(set(derived) - claiming)
-    assert not hiding, f"keys marked new but already driver-green: {hiding}"
+    assert json.loads(out.stdout.splitlines()[-1]) == list(entrymod.queries())
 
 
 def test_coverage_doc_mentions_every_catalog_query():
@@ -206,28 +140,6 @@ def test_coverage_doc_mentions_every_catalog_query():
     # superstring key or stray prose
     missing = [k for k in entrymod.queries() if f"`{k}`" not in text]
     assert not missing, missing
-
-
-def test_coverage_doc_lists_exact_window_tail_command():
-    """COVERAGE.md's copy-paste re-verification command must name exactly
-    the keys in queries.WINDOW_TAIL — a stale command silently skips
-    re-verifying a displaced entry (this bit round 6: j4_dictionary_join
-    was displaced but never added to the documented command)."""
-    import re
-    from pathlib import Path
-
-    from temporai_mivdp_spark.queries import WINDOW_TAIL
-
-    text = (Path(__file__).resolve().parents[1] / "COVERAGE.md").read_text()
-    m = re.search(
-        r"oracle_check\.py /root/testdata/sf0\.01 ([a-z0-9_\s]+?)`", text
-    )
-    assert m, "re-verification command not found in COVERAGE.md"
-    documented = set(m.group(1).split())
-    assert documented == set(WINDOW_TAIL), (
-        sorted(set(WINDOW_TAIL) - documented),
-        sorted(documented - set(WINDOW_TAIL)),
-    )
 
 
 # slow tier (r13, conftest default-skip): ANSI strict-dialect sweep of all 99 entries (~175s): stress tier;

@@ -698,6 +698,21 @@ def test_language_id_ngram_weights_are_a_local_relation(spark, gate_docs):
     assert "LocalTableScan [__g" in plan and "ExistingRDD" not in plan, plan
 
 
+@pytest.mark.parametrize("name", ["sample_stratified", "embed_kmeans"])
+def test_small_driver_tables_are_local_relations(spark, name):
+    """The stratified rate table and the k-means centroids are built from
+    Arrow tables: once executed, the query reads them from a
+    LocalTableScan and no Python RDD (``Scan ExistingRDD``) remains."""
+    import __spark_entry__ as entrymod
+    from temporai_mivdp_spark.plans import executed_plan
+    from tests.conftest import SF_SMOKE
+
+    df = entrymod.queries()[name](spark, SF_SMOKE)
+    df.collect()
+    plan = executed_plan(df)
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+
 def test_warm_curation_pass_compiles_no_class(spark, tmp_path):
     """The five llm_curation steps (exact duplicates, Jaccard pairs,
     clusters, representatives, curation gate), run twice: the second
