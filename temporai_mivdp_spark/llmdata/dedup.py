@@ -102,25 +102,6 @@ def shingles(
     )
 
 
-def _hashed_shingle_rows(toks: DataFrame, n: int, id_col: str) -> DataFrame:
-    """(id, shingle) rows with the shingle already xxhash64'd, from a
-    pre-tokenized (id, __toks) frame. Hashing INSIDE the transform (vs.
-    after the explode) keeps the Generate node emitting 8-byte longs
-    instead of strings — measured 12% off the shingle+set stage at
-    sf0.1, same sets bit-for-bit. Shared by the posting-list build and
-    the hot-key detector so the two can never drift onto different
-    shingle identities."""
-    return toks.select(
-        id_col,
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("__toks") - n),
-                lambda i: F.xxhash64(F.concat_ws(" ", F.slice("__toks", i + 1, n))),
-            )
-        ).alias("shingle"),
-    )
-
-
 def _hashed_shingle_sets(toks: DataFrame, n: int, id_col: str) -> DataFrame:
     """(id, __set) with __set = the DISTINCT xxhash64 shingles of the
     document, computed ROW-LOCALLY with ``array_distinct`` in the same
@@ -148,183 +129,6 @@ def _hashed_shingle_sets(toks: DataFrame, n: int, id_col: str) -> DataFrame:
     )
 
 
-def _hot_shingle_hashes(
-    toks: DataFrame, n: int, id_col: str, cap: int, sample_inv: int
-) -> DataFrame:
-    """Shingle hashes PROVABLY over the doc-frequency cap, detected from
-    a deterministic 1/``sample_inv`` hash-sample of the documents.
-
-    The sample is a subset, so a shingle's sampled doc-frequency is a
-    lower bound on its true doc-frequency: every key this returns has
-    true df > cap (no false positives — the correctness direction; see
-    the ngram_jaccard_pairs docstring for why a count-min sketch's
-    over-estimate fails this test). ``sample_inv=1`` is the exact full
-    count. Doc-frequency is a plain count over ROW-LOCAL distinct
-    shingle sets (``_hashed_shingle_sets``): each unique-id document
-    contributes each of its shingles exactly once, so the count equals
-    the count_distinct(id) the round-11 detector computed, minus the
-    (shingle, id) dedup level count_distinct expands to — a fixed-width
-    one-level hash aggregate, no object agg anywhere."""
-    sampled = toks
-    if sample_inv > 1:
-        sampled = toks.filter(
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(sample_inv)) == 0
-        )
-    # explode_outer, NOT explode: InferFiltersFromGenerate would add
-    # size(__set) > 0 for a plain explode and push the whole
-    # tokenize+shingle+array_distinct expression below the fan-out
-    # exchange into the scan filter — re-running the heaviest map work
-    # single-threaded on the scan (measured 2.4x on the whole query).
-    # The outer generate is exempt from that rule, and the >= n token
-    # filter already guarantees every set is non-empty, so no null
-    # shingle rows can occur and results are identical.
-    return (
-        _hashed_shingle_sets(sampled, n, id_col)
-        .select(F.explode_outer("__set").alias("shingle"))
-        .groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("__df"))
-        .filter(F.col("__df") > cap)
-        .select("shingle")
-    )
-
-
-def _posting_pairs_streamed(
-    sh: DataFrame, id_col: str, max_shingle_freq: int | None
-) -> DataFrame:
-    """Candidate pairs from (id, __sz, shingle) rows WITHOUT building
-    posting lists: repartition by shingle, sort within partitions by
-    (shingle, id), and stream the sorted runs through a ``mapInArrow``
-    pair generator — each co-occurrence run is visible as a contiguous
-    slice, pairs are emitted with one buffered run at a time (bounded by
-    the doc-frequency cap when set), and no aggregation buffer exists
-    anywhere.
-
-    Replaces the rounds-5-12 ``groupBy(shingle).agg(sort_array(
-    collect_list(struct(id, sz))))`` posting build — an
-    ObjectHashAggregate whose hash map over every shingle row falls back
-    to sort-based aggregation past 128 keys and external-sorts struct
-    rows while materializing per-key array buffers: the repo's own
-    worst 100x cell (SCALING.md r11/r12). The sort this plan pays
-    instead is a Tungsten radix sort over fixed-width rows, and the
-    pair emit streams out of it. Measured (exp_jaccard_posting.py at
-    commit 64a744e, interleaved min-of-R, identical pair output
-    asserted): sf0.1 2.305 -> 1.955 s; 30x inflation 60.6 -> 23.2 s
-    (2.6x); the materialize+self-join alternative ties at 30x but loses
-    at sf0.1 (3.669) and needs a per-run scratch write. This is the engine's one
-    Arrow boundary outside the multimodal family — guide §4.2's
-    sanctioned shape (whole batches to vectorized numpy, constructed
-    once per task, ~20 bytes/row across the boundary), not a row-wise
-    UDF.
-
-    The emit is vectorized ACROSS runs by run-length classes: runs of
-    equal length L form an (m, L) index matrix and ``np.triu_indices``
-    broadcasts the within-run pair template over all m runs at once —
-    no per-run Python loop (at the 100x cell most runs have L=2, so a
-    per-run loop would execute ~45M Python iterations; the class loop
-    executes at most #distinct-lengths <= cap iterations per batch).
-    Doc ids pass through ``pyarrow.Array.take`` so any orderable id
-    type works (the catalog's long ids take the same vectorized path).
-
-    The cap (``max_shingle_freq``) is applied exactly here: a run's
-    length IS the shingle's doc frequency, so dropping runs longer than
-    the cap reproduces the old ``__df <= cap`` posting filter
-    bit-for-bit. With ``max_shingle_freq=None`` runs are unbounded —
-    the same class the unbounded ``collect_list`` had, but streamed
-    (one run buffered per task, not one buffer per hash-map key)."""
-    import numpy as np
-    import pyarrow as pa
-
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    id_type = sh.schema[id_col].dataType
-    out_schema = StructType(
-        [
-            StructField("id_a", id_type),
-            StructField("sa", IntegerType()),
-            StructField("id_b", id_type),
-            StructField("sb", IntegerType()),
-        ]
-    )
-    cap = max_shingle_freq
-
-    def emit(batches):
-        out_fields = None
-        carry_sh = np.empty(0, dtype=np.int64)
-        carry_sz = np.empty(0, dtype=np.int64)
-        carry_id = None  # pa.Array of the id type
-
-        def run_pairs(shv, idv, szv, complete_only):
-            """Pairs from complete runs; returns (batch|None, consumed)."""
-            if len(shv) == 0:
-                return None, 0
-            starts = np.flatnonzero(np.r_[True, shv[1:] != shv[:-1]])
-            last_start = int(starts[-1])
-            if complete_only:
-                end = last_start
-                starts = starts[:-1]
-            else:
-                end = len(shv)
-            if len(starts) == 0:
-                return None, end
-            lens = np.diff(np.r_[starts, end])
-            ia_parts, ib_parts = [], []
-            for L in np.unique(lens):
-                if L < 2 or (cap is not None and L > cap):
-                    continue
-                s = starts[lens == L]
-                idx = s[:, None] + np.arange(L)
-                ia, ib = np.triu_indices(int(L), 1)
-                ia_parts.append(idx[:, ia].ravel())
-                ib_parts.append(idx[:, ib].ravel())
-            if not ia_parts:
-                return None, end
-            ia = np.concatenate(ia_parts)
-            ib = np.concatenate(ib_parts)
-            batch = pa.RecordBatch.from_arrays(
-                [
-                    idv.take(pa.array(ia)),
-                    pa.array(szv[ia].astype(np.int32), pa.int32()),
-                    idv.take(pa.array(ib)),
-                    pa.array(szv[ib].astype(np.int32), pa.int32()),
-                ],
-                schema=out_fields,
-            )
-            return batch, end
-
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            if out_fields is None:
-                idt = b.column(1).type
-                out_fields = pa.schema(
-                    [("id_a", idt), ("sa", pa.int32()),
-                     ("id_b", idt), ("sb", pa.int32())]
-                )
-                carry_id = pa.array([], type=idt)
-            shv = np.concatenate([carry_sh, b.column(0).to_numpy()])
-            idv = pa.concat_arrays([carry_id, b.column(1)])
-            szv = np.concatenate(
-                [carry_sz, b.column(2).to_numpy().astype(np.int64)]
-            )
-            out, cut = run_pairs(shv, idv, szv, complete_only=True)
-            carry_sh, carry_id, carry_sz = (
-                shv[cut:], idv.slice(cut), szv[cut:]
-            )
-            if out is not None and out.num_rows:
-                yield out
-        if out_fields is not None:
-            out, _ = run_pairs(carry_sh, carry_id, carry_sz, False)
-            if out is not None and out.num_rows:
-                yield out
-
-    sorted_sh = (
-        sh.select("shingle", F.col(id_col).alias("__pid"), "__sz")
-        .repartition(F.col("shingle"))
-        .sortWithinPartitions("shingle", "__pid")
-    )
-    return sorted_sh.mapInArrow(emit, out_schema)
-
-
 def ngram_jaccard_pairs(
     docs: DataFrame,
     n: int = 3,
@@ -332,8 +136,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_shingle_freq: int | None = 1000,
-    prefilter_hot: bool | None = None,
-    hot_sample_inv: int = 8,
 ) -> DataFrame:
     """Near-duplicate pairs by n-gram Jaccard similarity.
 
@@ -345,132 +147,56 @@ def ngram_jaccard_pairs(
     a quadratic bucket (and contributes almost no discriminative signal).
     Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
 
-    ``prefilter_hot`` moves the frequency cap BEFORE the posting-list
-    aggregation, bounding every ``collect_list`` buffer: without it, a
-    hot shingle's FULL posting list is built before being discarded —
-    one shingle shared by 10M docs is a 10M-entry buffer in a single
-    aggregation task, the OOM class the round-11 third-decade sweep
-    demonstrated directly (a 4M-key object-agg hash map killed a 24 GiB
-    heap). Since round 12 the prefilter is ON BY DEFAULT whenever
-    ``max_shingle_freq`` is set (``prefilter_hot=None`` resolves to
-    ``cap is not None``); pass ``False`` to restore the unbounded
-    buffers, ``True`` with no cap raises.
-
-    Detector design — why a SAMPLE and not a count-min sketch: the hot
-    set is found by counting shingle doc-frequencies over a
-    deterministic 1/``hot_sample_inv`` hash-sample of the documents
-    (``xxhash64(id) % inv == 0``). A sampled doc-frequency is a LOWER
-    bound on the true doc-frequency (the sample is a subset), so
-    dropping keys whose sampled count already exceeds the cap provably
-    drops only keys the exact post-aggregation filter would drop anyway
-    — results are bit-identical by construction, with no second
-    verification pass. A count-min sketch errs in the OTHER direction
-    (over-estimates), so thresholding it could drop under-cap keys and
-    silently change results — disqualifying, which is why
-    ``operators/sketches.py`` stays on the distinct-count side of the
-    house. The trade: keys between ``cap`` and roughly
-    ``2 * cap * hot_sample_inv`` may evade the sampled detector (they
-    still get dropped exactly, post-aggregation), so the practical
-    buffer bound is ~``2 * cap * inv`` entries instead of a hard
-    ``cap``; the OOM class (boilerplate at 10^3-10^4 x cap) is caught
-    with near-certainty (a key needs sampled_df <= cap to evade;
-    P[Binom(10M, 1/8) <= 1000] ~ e^-1.2M). ``hot_sample_inv=1``
-    degenerates to the exact full count (a hard ``cap`` bound at the
-    full detector cost).
-
-    Cost, stated honestly: Spark does not reuse the shared subtree (the
-    SMJ analysis below measured this via persist), so the detector
-    branch RE-COMPUTES scan -> tokenize -> shingle over the sampled
-    fraction — ~1/inv of the upstream pipeline plus one fixed-width
-    shuffle of ~1/inv of the shingle rows. The round-11 full-width
-    detector (every row, and derived from ``sh`` so it also re-ran the
-    per-doc set aggregation) measured +32% at the 100x cell; the
-    sampled detector replaces both terms (fraction sampled, object-agg
-    skipped — doc-frequency here is a fixed-width count_distinct over
-    raw shingle hashes). Overhead re-measured at the same 100x cell in
-    SCALING.md round 12.
+    The cap is exact and applied BEFORE the self-join: the over-cap
+    shingles are counted (one fixed-width aggregate over the shingle
+    rows) and broadcast left-anti-joined away, so a hot shingle never
+    reaches the join. The set sizes keep every shingle, capped or not.
+    The shingle rows are row-local (no aggregate below them), so when
+    the join shuffles, its second side reuses the first side's exchange:
+    the shingle subtree runs once for the join and once for the count.
+    With ``max_shingle_freq=None`` a shingle shared by L docs emits its
+    L(L-1)/2 pairs out of the join, which buffers (and spills) one key's
+    rows at a time; no buffer holds the pairs.
     """
-    if prefilter_hot and max_shingle_freq is None:
-        raise ValueError(
-            "prefilter_hot=True requires max_shingle_freq: with no cap "
-            "there is no hot-key definition to enforce (and silently "
-            "no-opping would hand back exactly the unbounded buffers "
-            "the flag exists to prevent)"
-        )
-    if hot_sample_inv < 1:
-        raise ValueError(f"hot_sample_inv must be >= 1, got {hot_sample_inv}")
-    if prefilter_hot is None:
-        prefilter_hot = max_shingle_freq is not None
     # hash-then-dedup: the 64-bit shingle hash is computed row-locally in
-    # the same codegen stage as the explode, so the distinct groupBy (and
-    # every shuffle after it) carries 8 bytes per shingle instead of ~n
-    # words. Hashing BEFORE the distinct also keeps hashing out of the
-    # string dropDuplicates path (measured ~20% on the whole query at
-    # sf0.1). xxhash64, not md5+conv: the output (pairs + jaccard) is
-    # invariant to WHICH collision-free hash identifies a shingle — only
-    # set cardinalities survive into the result — so Spark uses its native
-    # codegen'd hash while the DuckDB oracle keeps md5; both engines see
-    # the same sets. (MinHash can NOT do this: its hash values feed the
-    # band signatures, so it stays on the portable md5-based family.)
-    # ZERO shuffles build the distinct set AND its size: a document's
-    # shingles all live in one row's array, so ``array_distinct`` is the
-    # set, ``F.size`` its cardinality, and the explode emits
-    # (id, sz, shingle) rows — all in the scan's codegen stage. History:
-    # rounds 5-11 built the set as explode -> groupBy(id).collect_set —
-    # an ObjectHashAggregate pair whose hash map over every raw shingle
-    # row was the measured external-sort excess at the 100x cell
-    # (SCALING.md r11: the two collect_* stages), and before that a
-    # distinct groupBy(id, shingle) + window count cost two full
-    # shuffles. Round 12 removed the aggregation outright (guide §1.2:
-    # fix the distributed algorithm first); a groupBy(id, shingle)
-    # dedup + count-window variant was also measured and rejected
-    # (exp_jaccard_setsize.py at commit 64a744e: +12% at 30x vs
-    # collect_set).
+    # the same codegen stage as the explode, so every shuffle carries 8
+    # bytes per shingle instead of ~n words. xxhash64, not md5+conv: the
+    # output (pairs + jaccard) is invariant to WHICH collision-free hash
+    # identifies a shingle — only set cardinalities survive into the
+    # result — so Spark uses its native codegen'd hash while the DuckDB
+    # oracle keeps md5; both engines see the same sets. (MinHash can NOT
+    # do this: its hash values feed the band signatures, so it stays on
+    # the portable md5-based family.) ``array_distinct`` is the set and
+    # ``F.size`` its cardinality, so the (id, sz, shingle) rows come out
+    # of the scan's codegen stage with no shuffle.
     # Contract: id_col uniquely identifies documents (see
-    # _hashed_shingle_sets — duplicate ids previously got their sets
-    # unioned across rows; every caller in this repo dedups by a key).
+    # _hashed_shingle_sets; every caller in this repo dedups by a key).
     toks = docs.select(
         id_col, F.split(normalize_text(F.col(text_col)), " ").alias("__toks")
     ).filter(F.size("__toks") >= n)
-    # explode_outer for the same reason as _hot_shingle_hashes: a plain
-    # explode gets an inferred size(__set) > 0 filter pushed to the scan,
-    # duplicating the whole shingle pipeline below the fan-out exchange
-    # on one task. Sets are provably non-empty (size(__toks) >= n), so
-    # outer vs inner is a no-op on the data.
-    sets = _hashed_shingle_sets(toks, n, id_col)
-    sh = sets.select(
+    # explode_outer, NOT explode: InferFiltersFromGenerate would add
+    # size(__set) > 0 for a plain explode and push the whole
+    # tokenize+shingle+array_distinct expression below the fan-out
+    # exchange into the scan filter — re-running the heaviest map work
+    # single-threaded on the scan (measured 2.4x on the whole query).
+    # Sets are provably non-empty (size(__toks) >= n), so outer vs inner
+    # is a no-op on the data.
+    sh = _hashed_shingle_sets(toks, n, id_col).select(
         id_col, F.size("__set").alias("__sz"), F.explode_outer("__set").alias("shingle")
     )
-    if prefilter_hot:
-        # over-cap shingles only: the anti-join side stays broadcastable
-        # precisely because boilerplate shingles are few (if they were
-        # many, the cap would be mis-set for the corpus)
-        hot = _hot_shingle_hashes(
-            toks, n, id_col, cap=max_shingle_freq, sample_inv=hot_sample_inv
+    if max_shingle_freq is not None:
+        # one row per (doc, shingle), so the count is the doc frequency;
+        # the over-cap side stays broadcastable because boilerplate
+        # shingles are few (if they were many, the cap would be mis-set)
+        hot = (
+            sh.groupBy("shingle").count()
+            .filter(F.col("count") > max_shingle_freq)
+            .select("shingle")
         )
         sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    # Pair emit: sorted-run streaming (round 13, r12-verdict item 4) —
-    # repartition(shingle) + sortWithinPartitions + mapInArrow pair
-    # generation, replacing the posting-list
-    # groupBy(shingle).collect_list(struct(id, sz)) whose object-agg
-    # hash map was the repo's documented worst 100x cell (external sort
-    # of struct rows + per-key array buffers). Full rationale, bounds
-    # and measurements in _posting_pairs_streamed; the exact
-    # max_shingle_freq posting filter is applied inside the emit (a
-    # run's length IS the doc frequency). History of this stage, all
-    # measured at sf0.1 unless noted:
-    # * nested-transform HOF emit — 3.7-8s, GC outliers; rejected (r11).
-    # * shuffled-hash SELF-JOIN on shingle — stable 2.0s but the plan
-    #   instantiates the whole scan->shingle->set subtree twice;
-    #   rejected (r11). Re-tried in r13 over a per-run materialized
-    #   (id, sz, shingle) parquet: 3.669s at sf0.1, ties the streamed
-    #   emit at 30x — rejected (variant B of exp_jaccard_posting.py
-    #   at commit 64a744e).
-    # * posting collect_list + posexplode/slice emit (shipped r5-r12) —
-    #   2.305s at sf0.1, 60.6s at 30x (this session's interleaved A/B).
-    # * sorted-run streamed emit (shipped r13) — 1.955s at sf0.1,
-    #   23.2s at 30x, identical pair output asserted at both scales.
-    sized_pairs = _posting_pairs_streamed(sh, id_col, max_shingle_freq)
+    a = sh.select("shingle", F.col(id_col).alias("id_a"), F.col("__sz").alias("sa"))
+    b = sh.select("shingle", F.col(id_col).alias("id_b"), F.col("__sz").alias("sb"))
+    sized_pairs = a.join(b, "shingle").filter(F.col("id_a") < F.col("id_b"))
     # Size filter (the prefix-filter family's cheapest member, round 12):
     # jaccard = inter/(sa+sb-inter) is monotone-increasing in inter, and
     # inter <= min(sa, sb), so a pair's best achievable jaccard is
@@ -559,13 +285,13 @@ def minhash_lsh_candidates(
 
     Pairs are emitted row-locally from each (band, bh) bucket's sorted
     id list (posexplode + strictly-later tail slice), NOT via a
-    self-join of the band index on (band, bh): the join form
-    instantiates the whole corpus-scan -> signature subtree twice —
-    exchange/AQE stage reuse does not deduplicate it (same finding as
-    ngram_jaccard_pairs, measured there via persist) — and its output
-    is the same k² rows per bucket this emit produces. One groupBy
-    exchange replaces two signature computations plus a shuffle join;
-    measured 1.01s vs 1.13s at sf0.1 on top of halving the scans.
+    self-join of the band index on (band, bh): the signature is a
+    groupBy(id) aggregate, the join form instantiates the whole
+    corpus-scan -> signature subtree twice (exchange/AQE stage reuse did
+    not deduplicate it, measured via persist), and its output is the
+    same k² rows per bucket this emit produces. One groupBy exchange
+    replaces two signature computations plus a shuffle join; measured
+    1.01s vs 1.13s at sf0.1 on top of halving the scans.
 
     ``max_bucket_size`` drops degenerate buckets (e.g. a boilerplate
     corpus where one band hash collides across millions of docs) the
@@ -573,23 +299,37 @@ def minhash_lsh_candidates(
     bucket — the classic LSH contract where an over-full bucket means
     the docs really are near-identical.
 
-    ``prefilter_hot`` is the same buffer bound as
-    ``ngram_jaccard_pairs(prefilter_hot=True)``: the size filter above
-    runs AFTER ``collect_list``, so a degenerate bucket of 10M ids
-    still builds its full list in one aggregation task before being
-    dropped. The prefilter computes the band index of a deterministic
-    1/``hot_sample_inv`` hash-sample of the docs and drops the
-    (band, bh) buckets whose SAMPLED size already exceeds the cap — a
-    lower bound on the true size, so only buckets the post-aggregation
-    filter would drop anyway are removed (results identical by
-    construction; the full rationale, the count-min-sketch rejection,
-    and the evade-window math live on ``ngram_jaccard_pairs``). Since
-    round 12 it is ON BY DEFAULT whenever ``max_bucket_size`` is set
-    (``None`` resolves to ``cap is not None``); ``False`` restores
-    unbounded list buffers, ``True`` with no cap raises. Detector cost:
-    the signature subtree over 1/inv of the docs plus one fixed-width
-    shuffle of 1/inv of the band rows (Spark does not reuse the shared
-    subtree — same measurement as the jaccard twin)."""
+    ``prefilter_hot`` bounds the ``collect_list`` buffers: the size
+    filter above runs AFTER ``collect_list``, so a degenerate bucket of
+    10M ids still builds its full list in one aggregation task before
+    being dropped. The prefilter computes the band index of a
+    deterministic 1/``hot_sample_inv`` hash-sample of the docs
+    (``xxhash64(id) % inv == 0``) and broadcast anti-joins away the
+    (band, bh) buckets whose SAMPLED size already exceeds the cap. It
+    is ON BY DEFAULT whenever ``max_bucket_size`` is set (``None``
+    resolves to ``cap is not None``); ``False`` restores unbounded list
+    buffers, ``True`` with no cap raises.
+
+    Why a sample and not a count-min sketch: the sample is a subset, so
+    a bucket's sampled size is a LOWER bound on its true size, and only
+    buckets the post-aggregation filter would drop anyway are removed —
+    results are identical by construction, with no verification pass.
+    A count-min sketch errs the other way (it over-estimates), so
+    thresholding it could drop an under-cap bucket and silently change
+    results. The trade is the evade window: buckets between ``cap`` and
+    roughly ``2 * cap * hot_sample_inv`` may evade the sample (they are
+    still dropped exactly, after the aggregation), so the practical
+    buffer bound is ~``2 * cap * inv`` ids instead of a hard ``cap``. A
+    degenerate bucket at 10^3-10^4 x cap is caught with near-certainty
+    (to evade it needs a sampled size <= cap; P[Binom(10M, 1/8) <= 1000]
+    ~ e^-1.2M). ``hot_sample_inv=1`` is the exact full count.
+
+    Why LSH keeps the sample while ``ngram_jaccard_pairs`` counts
+    exactly: the sampled detector costs the signature subtree over 1/inv
+    of the docs plus one fixed-width shuffle of 1/inv of the band rows,
+    and an exact count over the full band index measured slower
+    (exec_min 1.22 s against 0.94 s at sf0.1 with
+    ``max_bucket_size=50``)."""
     if prefilter_hot and max_bucket_size is None:
         raise ValueError(
             "prefilter_hot=True requires max_bucket_size: with no cap "

@@ -832,13 +832,14 @@ def ivf_topk_from_index(
     _check_probe_contract(probes, max_probe_rows, "ivf_topk_from_index")
     centroids = spark.read.parquet(f"{path}/centroids")
     routed = _route_probes(probes, centroids, nprobe, vec_col, probe_id_col)
-    # collect the (small, serving-path) probe routing ONCE: the rows
-    # feed both the partition-filter list and — rebuilt as a local
-    # DataFrame — the broadcast join side, instead of re-executing the
-    # routing plan a second time inside the join
-    rows = routed.collect()
-    probe_buckets = spark.createDataFrame(rows, routed.schema)
-    needed = sorted({int(r["bucket"]) for r in rows})
+    # collect the (small, serving-path) probe routing ONCE: the Arrow
+    # table feeds both the partition-filter list and — rebuilt as a
+    # JVM-local relation (LocalTableScan, no Python worker) — the
+    # broadcast join side, instead of re-executing the routing plan a
+    # second time inside the join
+    table = routed.toArrow()
+    probe_buckets = spark.createDataFrame(table)
+    needed = sorted(set(table.column("bucket").to_pylist()))
     corpus = (
         spark.read.parquet(f"{path}/corpus")
         .filter(F.col("bucket").isin(needed))
@@ -931,11 +932,13 @@ def lsh_topk_from_index(
         "table",
         "bucket",
     )
-    # one probe-side execution: collected rows feed both the partition
+    # one probe-side execution: the Arrow table feeds both the partition
     # filters and the rebuilt-local broadcast side (see ivf twin)
-    sig_rows = sig.collect()
-    p_sig = spark.createDataFrame(sig_rows, sig.schema)
-    pairs = {(int(r["table"]), int(r["bucket"])) for r in sig_rows}
+    table = sig.toArrow()
+    p_sig = spark.createDataFrame(table)
+    pairs = set(
+        zip(table.column("table").to_pylist(), table.column("bucket").to_pylist())
+    )
     cond = None
     for t, b in sorted(pairs):
         c = (F.col("table") == t) & (F.col("bucket") == b)

@@ -59,12 +59,11 @@ def _materialized_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     item 5; guide §3.3 "materialising an intermediate truncates the
     plan"): write the augmented corpus ONCE to a RUN-KEYED scratch
     parquet and return the read-back frame, so the composition's many
-    consumers (jaccard shingle sets + hot-key detector, exact
+    consumers (jaccard shingle sets + over-cap shingle count, exact
     contamination corpus side, all-ids frame, leakage-safe split) feed
     from one cheap columnar read instead of each re-deriving the
     scan → union → mutate subtree (Catalyst does not share subtrees
-    across consumers, and the detector's sample pushdown defeats even
-    runtime ReusedExchange for its branch — r12 audit).
+    across consumers — r12 audit).
 
     NOT a cache: the path is keyed on a fresh uuid per BUILD (never on
     the dataset), every build recomputes the write from the parquet

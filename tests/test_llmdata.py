@@ -279,6 +279,27 @@ def test_persisted_lsh_index_parity_and_partition_pruning(spark, vectors):
     assert "table" in seg and "bucket" in seg, seg
 
 
+def test_index_probe_routing_is_a_local_relation(spark, vectors, tmp_path):
+    """Both persisted-index top-k paths rebuild their collected probe
+    routing from Arrow: once executed, the broadcast side is a
+    LocalTableScan and no Python RDD (``Scan ExistingRDD``) remains."""
+    from temporai_mivdp_spark.plans.inspect import executed_plan
+
+    cents, _ = similarity.kmeans_fit(vectors, n=6, iterations=4)
+    similarity.persist_ivf_index(vectors, cents, str(tmp_path / "ivf"))
+    similarity.persist_lsh_index(vectors, str(tmp_path / "lsh"), tables=2, bits=4)
+    probes = vectors.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("probe_id"), "embedding"
+    )
+    for df in (
+        similarity.ivf_topk_from_index(spark, str(tmp_path / "ivf"), probes, k=5),
+        similarity.lsh_topk_from_index(spark, str(tmp_path / "lsh"), probes, k=5),
+    ):
+        assert df.count() > 0
+        plan = executed_plan(df)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+
 def test_quantized_ivf_index_recall_and_append(spark, vectors):
     import tempfile
 

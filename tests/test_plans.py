@@ -256,22 +256,21 @@ def test_span_coverage_window_is_per_document(spark):
 def test_jaccard_set_build_is_row_local(spark):
     """Round 12: the per-doc shingle set is array_distinct of the
     row-local shingle array — zero collect_set ObjectHashAggregate (the
-    measured 100x external-sort cost, SCALING.md r11). Round 13: the
-    posting-list collect_list pair is gone too — the pair emit is the
-    sorted-run streamed generator (_posting_pairs_streamed), so the
-    plan has ZERO object aggregates and exactly one MapInArrow/
-    PythonMapInArrow node. Also pin the explode_outer fix: a plain
-    explode gets an inferred size(array_distinct(...)) > 0 filter
-    PUSHED INTO THE SCAN, re-running the whole shingle pipeline
-    single-threaded below the fan-out exchange."""
+    measured 100x external-sort cost, SCALING.md r11). The pairs come
+    from a self-join on the shingle, so the plan has ZERO object
+    aggregates and no MapInArrow (Python worker) node. Also pin the
+    explode_outer fix: a plain explode gets an inferred
+    size(array_distinct(...)) > 0 filter PUSHED INTO THE SCAN, re-running
+    the whole shingle pipeline single-threaded below the fan-out
+    exchange."""
     df = QUERIES["dedup_ngram_jaccard"](spark, SF_SMOKE)
     plan = plans.executed_plan(df)
     assert "collect_set" not in plan, "per-doc set must be row-local"
-    assert "collect_list" not in plan, "posting lists must be streamed"
+    assert "collect_list" not in plan, "no posting lists"
     assert "array_distinct" in plan
     s = plans.plan_summary(df)
     assert s.get("ObjectHashAggregate", 0) == 0, s
-    assert plan.count("MapInArrow") >= 1, "streamed pair emit missing"
+    assert plan.count("MapInArrow") == 0, "pair emit left the JVM"
     for line in plan.splitlines():
         if "Filter" in line and "collect" not in line:
             assert "array_distinct" not in line, (

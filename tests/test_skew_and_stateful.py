@@ -162,17 +162,43 @@ def test_ngram_jaccard_stop_shingle_capped(spark):
     assert capped.count() == 0  # stop-shingle dropped -> no candidate blowup
 
 
-def test_ngram_jaccard_prefilter_hot_same_output(spark):
-    """prefilter_hot moves the frequency cap BEFORE the posting-list
-    aggregation (broadcast anti-join of the over-cap shingles) so a hot
-    shingle never builds its full buffer — the OOM class the round-11
-    third-decade sweep demonstrated. Semantics must be IDENTICAL to the
-    post-aggregation filter: same pairs, same jaccard values, on a
-    corpus that mixes a stop-shingle (present in every doc) with real
-    near-duplicate pairs that must survive.
+def _jaccard_reference(rows, n, cap, threshold):
+    """Plain-Python n-gram Jaccard over (id, text) rows: string shingle
+    sets of the normalized text, shingles in more than ``cap`` docs left
+    out of the intersection, full set sizes in the denominator. Only
+    pairs sharing a kept shingle are candidates."""
+    from collections import Counter
 
-    Plan shape is asserted too: the pre-filtered plan must carry a
-    broadcast join, and the default plan must not."""
+    sets = {}
+    for i, text in rows:
+        toks = " ".join(text.lower().split()).split(" ")
+        if len(toks) >= n:
+            sets[i] = {" ".join(toks[j:j + n]) for j in range(len(toks) - n + 1)}
+    doc_freq = Counter(s for ss in sets.values() for s in ss)
+    ids = sorted(sets)
+    out = []
+    for x, a in enumerate(ids):
+        for b in ids[x + 1:]:
+            inter = sum(
+                1 for s in sets[a] & sets[b] if cap is None or doc_freq[s] <= cap
+            )
+            if inter:
+                jac = inter / (len(sets[a]) + len(sets[b]) - inter)
+                if jac >= threshold:
+                    out.append((a, b, round(jac, 9)))
+    return sorted(out)
+
+
+def _canon_pairs(df):
+    return sorted((r.id_a, r.id_b, round(r.jaccard, 9)) for r in df.collect())
+
+
+def test_ngram_jaccard_prefilter_hot_same_output(spark):
+    """The frequency cap is applied before the pairs are built (a
+    broadcast anti-join of the exactly counted over-cap shingles). The
+    result must equal the plain-Python reference — same pairs, same
+    jaccard values — on a corpus that mixes a stop-shingle (present in
+    every doc) with real near-duplicate pairs that must survive."""
     from temporai_mivdp_spark.llmdata import dedup
 
     rows = []
@@ -183,26 +209,38 @@ def test_ngram_jaccard_prefilter_hot_same_output(spark):
             rows.append((1000 + i, f"click here now unique{i} tail{i} words{i} zz"))
     docs = spark.createDataFrame(rows, "doc_id: long, text: string")
 
-    base = dedup.ngram_jaccard_pairs(
-        docs, n=3, threshold=0.1, max_shingle_freq=30, prefilter_hot=False
+    got = _canon_pairs(
+        dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.1, max_shingle_freq=30)
     )
-    # hot_sample_inv=1: the exact detector — guarantees the stop-shingle
-    # is anti-joined away (sampled detection on this 66-doc fixture
-    # would be vacuous; the sampled tier has its own test below)
-    pre = dedup.ngram_jaccard_pairs(
-        docs, n=3, threshold=0.1, max_shingle_freq=30, hot_sample_inv=1
-    )
-    canon = lambda df: sorted(  # noqa: E731
-        (r.id_a, r.id_b, round(r.jaccard, 9)) for r in df.collect()
-    )
-    got = canon(pre)
-    assert got == canon(base)
+    assert got == _jaccard_reference(rows, 3, 30, 0.1)
     assert got, "fixture must produce surviving near-dup pairs"
 
-    pre_plan = pre._jdf.queryExecution().executedPlan().toString()
-    base_plan = base._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in pre_plan, pre_plan
-    assert "BroadcastHashJoin" not in base_plan, base_plan
+
+def test_ngram_jaccard_uncapped_shingle_in_every_doc(spark):
+    """Legal extreme: no cap, threshold 0, one shingle shared by all
+    1,500 docs. With broadcasts off the self-join runs sort-merge and
+    must emit every one of the n(n-1)/2 pairs, with no Python node."""
+    from temporai_mivdp_spark.llmdata import dedup
+    from temporai_mivdp_spark.plans import executed_plan
+
+    n = 1500
+    docs = spark.range(n).select(
+        F.col("id").alias("doc_id"),
+        F.format_string("click here now unique%d tail%d words%d", "id", "id", "id")
+        .alias("text"),
+    )
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        pairs = dedup.ngram_jaccard_pairs(
+            docs, n=3, threshold=0.0, max_shingle_freq=None
+        )
+        assert pairs.count() == n * (n - 1) // 2
+        plan = executed_plan(pairs)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert "SortMergeJoin" in plan, plan
+    assert "Python" not in plan and "MapInArrow" not in plan, plan
 
 
 def test_minhash_lsh_prefilter_hot_same_output(spark):
@@ -230,67 +268,32 @@ def test_minhash_lsh_prefilter_hot_same_output(spark):
     assert "BroadcastHashJoin" in pre._jdf.queryExecution().executedPlan().toString()
 
 
-def test_sampled_hot_detector_catches_boilerplate_and_is_sound(spark):
-    """The round-12 sampled detector: a deterministic 1/inv doc-sample's
-    per-shingle count is a LOWER bound on the true doc-frequency, so
-    (a) every key it flags is provably over-cap (soundness — checked
-    here against exact counts), and (b) a genuinely hot boilerplate
-    shingle (300 docs vs cap 20) is caught even at inv=4, and the
-    final pair set is identical to the unfiltered post-agg path."""
-    from pyspark.sql import functions as F
-
+def test_ngram_jaccard_boilerplate_cap_matches_reference(spark):
+    """Boilerplate shingles in all 300 docs (cap 20) are dropped exactly:
+    the pairs and jaccard values equal the plain-Python reference at
+    threshold 0, where every surviving candidate pair is visible."""
     from temporai_mivdp_spark.llmdata import dedup
-    from temporai_mivdp_spark.llmdata.dedup import (
-        _hashed_shingle_rows,
-        _hot_shingle_hashes,
-    )
-    from temporai_mivdp_spark.llmdata.text import normalize_text
 
-    n_docs, cap, inv = 300, 20, 4
-    docs = spark.createDataFrame(
-        [(i, f"subscribe to our newsletter unique{i} tail{i} words{i}")
-         for i in range(n_docs)],
-        "doc_id: long, text: string",
-    )
-    toks = docs.select(
-        "doc_id", F.split(normalize_text(F.col("text")), " ").alias("__toks")
-    ).filter(F.size("__toks") >= 3)
+    rows = [
+        (i, f"subscribe to our newsletter unique{i} tail{i} words{i}")
+        for i in range(300)
+    ]
+    # near-dup twins that share the boilerplate AND their own shingles
+    rows += [(1000 + i, t + " zz") for i, t in rows[::50]]
+    docs = spark.createDataFrame(rows, "doc_id: long, text: string")
 
-    hot = _hot_shingle_hashes(toks, 3, "doc_id", cap=cap, sample_inv=inv)
-    flagged = {r.shingle for r in hot.collect()}
-    # (b) the boilerplate shingles are caught by the sample
-    assert flagged, "detector must flag the 300-doc boilerplate shingles"
-
-    # (a) soundness: every flagged key's EXACT doc-frequency is over cap
-    exact = (
-        _hashed_shingle_rows(toks, 3, "doc_id")
-        .groupBy("shingle")
-        .agg(F.count_distinct("doc_id").alias("df"))
+    got = _canon_pairs(
+        dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.0, max_shingle_freq=20)
     )
-    under_cap_flagged = {
-        r.shingle for r in exact.collect() if r.df <= cap
-    } & flagged
-    assert not under_cap_flagged
-
-    # end-to-end: default (auto prefilter, sampled) == prefilter off
-    canon = lambda df: sorted(  # noqa: E731
-        (r.id_a, r.id_b, round(r.jaccard, 9)) for r in df.collect()
-    )
-    assert canon(
-        dedup.ngram_jaccard_pairs(
-            docs, n=3, threshold=0.0, max_shingle_freq=cap, hot_sample_inv=inv
-        )
-    ) == canon(
-        dedup.ngram_jaccard_pairs(
-            docs, n=3, threshold=0.0, max_shingle_freq=cap, prefilter_hot=False
-        )
-    )
+    assert got == _jaccard_reference(rows, 3, 20, 0.0)
+    assert len(got) == 6, got
 
 
 def test_prefilter_hot_defaults_and_guards(spark):
-    """Round-12 defaults: prefilter_hot=None resolves to on-iff-cap-set
-    (the plan carries the detector's broadcast anti-join exactly when a
-    cap exists), and the r11 silent no-op is now a loud ValueError."""
+    """The jaccard cap's left-anti join is planned exactly when a cap is
+    set. LSH: prefilter_hot=None resolves to on-iff-cap-set (the plan
+    carries the detector's broadcast anti-join exactly when a cap
+    exists), and the r11 silent no-op is now a loud ValueError."""
     import pytest
 
     from temporai_mivdp_spark.llmdata import dedup
@@ -303,20 +306,16 @@ def test_prefilter_hot_defaults_and_guards(spark):
 
     with_cap = dedup.ngram_jaccard_pairs(docs, max_shingle_freq=5)
     no_cap = dedup.ngram_jaccard_pairs(docs, max_shingle_freq=None)
-    assert "BroadcastHashJoin" in plan(with_cap)
-    assert "BroadcastHashJoin" not in plan(no_cap)
+    assert "LeftAnti" in plan(with_cap)
+    assert "LeftAnti" not in plan(no_cap)
 
     lsh_cap = dedup.minhash_lsh_candidates(docs, 8, 4, max_bucket_size=5)
     lsh_none = dedup.minhash_lsh_candidates(docs, 8, 4)
     assert "BroadcastHashJoin" in plan(lsh_cap)
     assert "BroadcastHashJoin" not in plan(lsh_none)
 
-    with pytest.raises(ValueError, match="max_shingle_freq"):
-        dedup.ngram_jaccard_pairs(docs, max_shingle_freq=None, prefilter_hot=True)
     with pytest.raises(ValueError, match="max_bucket_size"):
         dedup.minhash_lsh_candidates(docs, 8, 4, prefilter_hot=True)
-    with pytest.raises(ValueError, match="hot_sample_inv"):
-        dedup.ngram_jaccard_pairs(docs, max_shingle_freq=5, hot_sample_inv=0)
     with pytest.raises(ValueError, match="hot_sample_inv"):
         dedup.minhash_lsh_candidates(
             docs, 8, 4, max_bucket_size=5, hot_sample_inv=0

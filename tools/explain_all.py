@@ -1,4 +1,5 @@
-"""Dump physical-plan summaries for every catalog query to PLANS.md —
+"""Dump physical-plan summaries for every catalog query to PLANS.md
+(one row per query, sorted by name) —
 the plan-review artifact backing ARCHITECTURE.md's shuffle-discipline
 claims — and the headline-query plan fingerprints to PLANS.json, the
 committed reference that bench.py's per-query fingerprints are diffed
@@ -85,7 +86,9 @@ def main() -> None:
         "| query | plan nodes | pushed filters |",
         "|---|---|---|",
     ]
-    for name, fn in entrymod.queries().items():
+    # rows by name, not queries() order: that order follows the driver
+    # artifacts, and a new one must not reorder the table
+    for name, fn in sorted(entrymod.queries().items()):
         df = fn(spark, SF)
         s = plan_summary(df)
         pf = pushed_filters(df)
@@ -94,7 +97,7 @@ def main() -> None:
         lines.append(f"| {name} | {nodes} | {pushed} |")
     with open("PLANS.md", "w") as f:
         f.write("\n".join(lines) + "\n")
-    print(f"wrote PLANS.md ({len(lines) - 8} queries)")
+    print(f"wrote PLANS.md ({len(lines) - 9} queries)")
 
     qs = entrymod.queries()
     # HEADLINE (timed) + PINNED_EXTRAS (planning-only) — same set bench.py
