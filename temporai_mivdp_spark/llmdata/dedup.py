@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from temporai_mivdp_spark.session import job_description
 
@@ -1337,6 +1338,110 @@ def _rotate_checkpoint(df: DataFrame, prev_ids: set):
     return out, new_ids
 
 
+#: Edge cap of ``duplicate_clusters``' driver tier. Measured with
+#: ``tools/measure.py`` at local[4] (4-core Xeon, 15 GB) on synthetic
+#: graphs of 4-node chains with scattered ids, each tier forced, build +
+#: fastest execution: 10k edges star 2.06 s / driver 0.26 s; 100k 3.96 /
+#: 0.78; 1M 19.96 / 6.60; 4M 77.51 / 7.45, identical hashes throughout.
+#: No crossover shows below 4M edges on four cores: the star tier pays
+#: about four jobs per round and a shuffle per half-round, the driver
+#: tier about 2 µs per edge on one core. The cap is set where the
+#: driver's share stays bounded instead: at 1M edges the collected
+#: edges and the labelling arrays take about 100 MB of driver memory,
+#: and the labels (at most 2M rows, 32 MB as Arrow) stay under Spark's
+#: 48 MB ``spark.sql.execution.arrow.localRelationThreshold``, so they
+#: plan as a ``LocalTableScan`` with real size statistics. A local
+#: relation ships its rows with every execution's tasks, which is where
+#: the 1M-edge driver tier spends 3.8 of its 6.6 s. A caller that reads
+#: the labels twice per execution, as ``pipeline.guard_corpus`` does
+#: (``expand_contamination`` and ``leakage_safe_split``), pays more: its
+#: joins plan as broadcasts of the labels. Measured on the same graphs
+#: with that caller, build + one execution, star / driver: 100k edges
+#: 3.88 + 1.66 / 1.29 + 2.24 s; 300k 6.53 + 2.82 / 2.95 + 5.51; 1M
+#: 23.38 + 9.21 / 11.03 + 21.52. The cap holds for one execution of the
+#: result (a tie at 1M); a caller that executes such labels again loses
+#: past about 300k edges, and its largest task's peak memory is 1.8-3x
+#: the star tier's (608 against 336 MB at 1M). The catalog's graphs stay
+#: far below: 6,024 edges at sf0.1, growing linearly with inflation.
+_CLUSTERS_DRIVER_MAX_EDGES = 1_000_000
+
+#: Id types whose Arrow sort order is Spark's: integers, and strings in
+#: the default binary collation (UTF-8 byte order is code point order).
+#: Any other id type takes the star tier.
+_CLUSTERS_DRIVER_ID_TYPES = (
+    T.ByteType(), T.ShortType(), T.IntegerType(), T.LongType(), T.StringType()
+)
+
+
+def _min_label_roots(a, b, n: int):
+    """Component roots of nodes ``0..n-1`` under the edges ``a[i]–b[i]``
+    (numpy int arrays): every root hooks onto the smallest root it
+    shares an edge with, and the parent pointers, which only ever point
+    to a smaller node, are jumped until each points at its root. Returns
+    ``(label, rounds)``: ``label[x]`` is the smallest node of ``x``'s
+    component, ``rounds`` the hooking rounds it took. Every root with a
+    smaller neighbour hooks in each round, so a chain whose ids
+    alternate low/high halves its roots per round. Over a random
+    permutation of 1M ids a chain took 14 rounds and a binary tree 7,
+    under log2(n) = 20 (a permuted chain's bound is tested)."""
+    import numpy as np
+
+    label, rounds = np.arange(n), 0
+    while not np.array_equal(la := label[a], lb := label[b]):
+        np.minimum.at(label, np.maximum(la, lb), np.minimum(la, lb))
+        while not np.array_equal(up := label[label], label):
+            label = up
+        rounds += 1
+    return label, rounds
+
+
+def _clusters_on_driver(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame | None:
+    """``duplicate_clusters``' driver tier: collect at most
+    ``_CLUSTERS_DRIVER_MAX_EDGES + 1`` edges in one labelled job, label
+    the components on the driver and return them as a local relation.
+    Returns None for the star tier to take over: before any job when the
+    id type is not in ``_CLUSTERS_DRIVER_ID_TYPES``, after that one job
+    when the graph has more edges than the cap.
+
+    Null and self-loop edges are dropped in Spark by the star tier's own
+    ``u != v`` filter, after both ends are cast to the type the star
+    tier's union gives them. On the driver, every id is replaced by its
+    rank in sorted id order, so the smallest rank of a component is its
+    smallest id, and ``_min_label_roots`` labels the ranks."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    spark = pairs.sparkSession
+    u = pairs.select(F.col(id_a).alias("u")).unionByName(
+        pairs.select(F.col(id_b).alias("u"))
+    ).schema["u"]
+    if u.dataType not in _CLUSTERS_DRIVER_ID_TYPES:
+        return None
+    edges = pairs.select(
+        F.col(id_a).cast(u.dataType).alias("u"), F.col(id_b).cast(u.dataType).alias("v")
+    ).filter(F.col("u") != F.col("v"))
+    with job_description(spark, "duplicate_clusters: collect edges"):
+        table = edges.limit(_CLUSTERS_DRIVER_MAX_EDGES + 1).toArrow()
+    if table.num_rows > _CLUSTERS_DRIVER_MAX_EDGES:
+        return None
+    ends = pa.concat_arrays(
+        [table.column(c).combine_chunks() for c in ("u", "v")]
+    ).dictionary_encode()
+    order = pc.sort_indices(ends.dictionary).to_numpy().astype(np.int64)
+    rank = np.empty_like(order)
+    rank[order] = np.arange(len(order))
+    label, _ = _min_label_roots(*np.split(rank[ends.indices.to_numpy()], 2), len(order))
+    ids = ends.dictionary.take(pa.array(order))
+    schema = T.StructType([
+        T.StructField("doc_id", u.dataType, u.nullable),
+        T.StructField("cluster_id", u.dataType, True),
+    ])
+    return spark.createDataFrame(
+        pa.table({"doc_id": ids, "cluster_id": ids.take(pa.array(label))}), schema
+    )
+
+
 def duplicate_clusters(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -1344,15 +1449,34 @@ def duplicate_clusters(
     max_iterations: int = 20,
 ) -> DataFrame:
     """Resolve near-dup pairs into duplicate clusters: connected
-    components by alternating large-star / small-star contraction
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14 — plain window + shuffle rounds, no graph library). Returns
+    components, labelled on the driver for a small graph and otherwise by
+    alternating large-star / small-star contraction (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14 — plain
+    window + shuffle rounds, no graph library). Returns
     (doc_id, cluster_id) where cluster_id is the smallest doc id
     reachable through the pair graph — the canonical keeper.
 
     Pairwise dedup alone under-deletes: A~B and B~C leave both B and C
-    if handled independently. Min-label propagation (the previous
-    implementation) converges in O(diameter) rounds, which is fine for
+    if handled independently.
+
+    Two tiers, chosen by the observed graph size and returning the same
+    rows and schema. Every call first tries the driver tier
+    (``_clusters_on_driver``): one labelled ``duplicate_clusters:
+    collect edges`` job collects at most ``_CLUSTERS_DRIVER_MAX_EDGES +
+    1`` edges, and a graph within the cap is labelled on the driver and
+    returned as a local relation. A graph over the cap, or an id type
+    other than integers and binary-collated strings, takes the star
+    rounds below. A graph over the cap computes its pair stream twice:
+    once for the collect and again for the first star round. At sf0.1
+    local[4] that added 5.0 s to the catalog's ``dedup_duplicate_clusters``
+    build and 4.3 s to ``pipeline_guard_corpus`` (cap forced to 0; the
+    cap's measurements are next to it and in SCALING.md). Both tiers
+    drop an edge whose ends are equal or null and label every other end
+    with the smallest id of its component. ``max_iterations`` bounds the
+    star tier only.
+
+    Min-label propagation in Spark rounds (the earlier implementation)
+    converges in O(diameter) rounds, which is fine for
     the star/chain micro-components of a near-dup graph but degenerates
     on a pathological long-chain corpus (a 10k-chain needs 10k rounds).
     Star contraction halves component heights every alternation —
@@ -1385,6 +1509,9 @@ def duplicate_clusters(
     instead of O(log n) pinned RDDs per call lingering until context
     GC. ``max_iterations`` bounds the round count; running out raises.
     """
+    labelled = _clusters_on_driver(pairs, id_a, id_b)
+    if labelled is not None:
+        return labelled
     u, v, m = F.col("u"), F.col("v"), F.col("m")
     by_u = Window.partitionBy("u")
 

@@ -66,3 +66,13 @@ def spark():
 
 def ts(s: str) -> dt.datetime:
     return dt.datetime.fromisoformat(s)
+
+
+@pytest.fixture
+def star_tier(monkeypatch):
+    """Send every ``dedup.duplicate_clusters`` call of the test to the
+    star-contraction tier: the driver tier declines before its collect
+    job, as it does for an id type it cannot order."""
+    from temporai_mivdp_spark.llmdata import dedup
+
+    monkeypatch.setattr(dedup, "_clusters_on_driver", lambda *args: None)

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import math
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -633,7 +636,7 @@ def _jobs_of(spark, group, build):
     return out, [d.get() if d.isDefined() else None for d in descs]
 
 
-def test_duplicate_clusters_star_forest_converges_in_one_round(spark):
+def test_duplicate_clusters_star_forest_converges_in_one_round(spark, star_tier):
     """A 4-clique plus a pair is a star forest after one round, and the
     in-job convergence check sees it: no confirming second round, and
     every eager job is labelled with its round."""
@@ -648,6 +651,116 @@ def test_duplicate_clusters_star_forest_converges_in_one_round(spark):
     assert {r.doc_id: r.cluster_id for r in out.collect()} == {
         1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10,
     }
+
+
+def _permuted_chain(n, seed=0):
+    """A chain over a random permutation of ``0..n-1``: the smallest id
+    sits mid-chain, so no node hooks onto it in one round."""
+    ids = list(range(n))
+    random.Random(seed).shuffle(ids)
+    return list(zip(ids, ids[1:]))
+
+
+#: name -> (pairs, DDL schema of id_a and id_b)
+_TIER_GRAPHS = {
+    "chain-2000": ([(i, i + 1) for i in range(1999)], "id_a long, id_b long"),
+    "permuted-chain-2000": (_permuted_chain(2000), "id_a long, id_b long"),
+    # 6 roots with 4 children of 3 leaves each; roots are not the min ids
+    "two-level-trees": (
+        [(1000 + r, 100 * r + c) for r in range(6) for c in range(4)]
+        + [(100 * r + c, 100 * r + c + 10 * (g + 1)) for r in range(6)
+           for c in range(4) for g in range(3)],
+        "id_a long, id_b long",
+    ),
+    "dup-reversed-self-loops": (
+        [(1, 2), (2, 1), (1, 2), (3, 3), (3, 4), (4, 3), (4, 2), (9, 9)],
+        "id_a long, id_b long",
+    ),
+    "null-ids": (
+        [(1, None), (None, 2), (None, None), (2, 3), (5, None)], "id_a long, id_b long",
+    ),
+    "empty": ([], "id_a long, id_b long"),
+    "int-ids": ([(7, 3), (3, 5), (20, 21)], "id_a int, id_b int"),
+    "int-and-bigint-ids": ([(7, 3), (3, 5), (20, 2**40)], "id_a int, id_b long"),
+    "string-ids": (
+        [("b", "a"), ("é", "z"), ("ab", "b"), ("Z", "é"), ("q", None), ("x", "x")],
+        "id_a string, id_b string",
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_TIER_GRAPHS))
+def test_duplicate_clusters_tiers_agree(spark, request, name):
+    """The driver tier (one collect job) and the star rounds return the
+    same rows and schema: null and self-loop edges add no node, repeated
+    and reversed edges count once, and every id maps to its component's
+    smallest id in Spark's order of the widened id type."""
+    pairs, schema = _TIER_GRAPHS[name]
+    df = spark.createDataFrame(pairs, schema)
+    driver, descs = _jobs_of(
+        spark, f"tiers-{name}", lambda: dedup.duplicate_clusters(df)
+    )
+    assert descs and set(descs) == {"duplicate_clusters: collect edges"}
+    request.getfixturevalue("star_tier")
+    star = dedup.duplicate_clusters(df)
+    assert driver.schema == star.schema
+    got = sorted(tuple(r) for r in driver.collect())
+    assert got == sorted(tuple(r) for r in star.collect())
+    valid = [(a, b) for a, b in pairs if a is not None and b is not None]
+    assert dict(got) == _union_find_labels(valid)
+
+
+@pytest.mark.parametrize("n", [2000, 200_000])
+def test_min_label_roots_permuted_chain_rounds(n):
+    """The driver tier's hooking loop needs O(log n) rounds on a chain
+    whose ids are out of order, not O(diameter): each round is a full
+    numpy pass over the edges."""
+    import numpy as np
+
+    ids = np.random.default_rng(n).permutation(n)
+    label, rounds = dedup._min_label_roots(ids[:-1], ids[1:], n)
+    assert not label.any()
+    assert rounds <= math.ceil(math.log2(n)) + 1, rounds
+
+
+def test_duplicate_clusters_tiers_agree_on_jaccard_pairs(spark, request, tmp_path):
+    """Both tiers on a real pair plan: ``ngram_jaccard_pairs`` over a
+    corpus read back from parquet (an adaptive join and aggregate, not a
+    local relation) labels the same rows either way. 8 families of 6
+    docs, each doc one word away from the previous, ids out of order."""
+    rows = []
+    for g in range(8):
+        words = [f"w{i}f{g}" for i in range(20)]
+        for j in range(6):
+            words[j] = f"x{j}f{g}"
+            rows.append((10 * g + (5 * j + 3) % 6, " ".join(words)))
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(path)
+    pairs = dedup.ngram_jaccard_pairs(spark.read.parquet(path), n=3, threshold=0.5)
+    driver = sorted(tuple(r) for r in dedup.duplicate_clusters(pairs).collect())
+    request.getfixturevalue("star_tier")
+    star = sorted(tuple(r) for r in dedup.duplicate_clusters(pairs).collect())
+    assert driver == star
+    assert len(driver) == 48 and {c for _, c in driver} == {10 * g for g in range(8)}
+
+
+def test_duplicate_clusters_edge_cap(spark, monkeypatch):
+    """With the edge cap at k, k edges take the driver tier and k + 1
+    edges the star rounds, after the one collect job that counted them."""
+    k = 5
+    monkeypatch.setattr(dedup, "_CLUSTERS_DRIVER_MAX_EDGES", k)
+    collect = "duplicate_clusters: collect edges"
+
+    def chain(n):
+        return spark.createDataFrame([(i, i + 1) for i in range(n)], "id_a long, id_b long")
+
+    _, descs = _jobs_of(spark, "gate-at-cap", lambda: dedup.duplicate_clusters(chain(k)))
+    assert descs and set(descs) == {collect}
+    out, descs = _jobs_of(
+        spark, "gate-past-cap", lambda: dedup.duplicate_clusters(chain(k + 1))
+    )
+    assert collect in descs and "duplicate_clusters: star round 1" in descs
+    assert {r.cluster_id for r in out.collect()} == {0}
 
 
 @pytest.fixture(scope="module")
@@ -787,7 +900,7 @@ def test_simhash_bits_bounds(spark, docs):
 
 # slow tier (r13, conftest default-skip): ~11s failure-path stress
 @pytest.mark.slow
-def test_duplicate_clusters_raises_on_budget_exhaustion(spark):
+def test_duplicate_clusters_raises_on_budget_exhaustion(spark, star_tier):
     chain = spark.createDataFrame(
         [(i, i + 1, 0.9) for i in range(200)], "id_a: long, id_b: long, jaccard: double"
     )
@@ -797,10 +910,12 @@ def test_duplicate_clusters_raises_on_budget_exhaustion(spark):
     assert {r.cluster_id for r in ok.collect()} == {0}
 
 
-# slow tier (r13, conftest default-skip): ~22s convergence stress; cluster correctness stays covered by
-# test_duplicate_clusters_invariant-family + dedup_duplicate_clusters oracle
+# slow tier (r13, conftest default-skip): ~22s convergence stress. The star rounds' cluster
+# correctness stays covered in the default tier by the test_duplicate_clusters_tiers_agree family
+# (incl. real Jaccard pairs); the dedup_duplicate_clusters oracle covers the driver tier only,
+# since the catalog's graphs are under the edge cap
 @pytest.mark.slow
-def test_duplicate_clusters_chain_converges_in_log_rounds(spark):
+def test_duplicate_clusters_chain_converges_in_log_rounds(spark, star_tier):
     """Giant-component hardening: a 10k-node chain (diameter 10k) must
     converge within an O(log n) alternation budget — min-label
     propagation would need ~10k rounds here, large-star/small-star
@@ -2499,7 +2614,7 @@ def test_pipeline_docs_curation_scratch_does_not_accumulate(spark):
     assert not fresh, fresh
 
 
-def test_duplicate_clusters_checkpoint_rotation(spark):
+def test_duplicate_clusters_checkpoint_rotation(spark, star_tier):
     """The star-contraction loop must not accumulate checkpoint RDDs:
     at most ONE live persistent RDD per call (the returned frame's
     backing store), regardless of round count — a 1000-cluster-call

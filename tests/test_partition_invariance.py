@@ -137,7 +137,10 @@ def test_exact_duplicates_invariant(spark):
 # slow tier (r13, conftest default-skip): ~18s invariance sweep on the heaviest operator; the cheap
 # invariance family below stays in the default run
 @pytest.mark.slow
-def test_duplicate_clusters_invariant(spark):
+@pytest.mark.parametrize("tier", ["driver", "star"])
+def test_duplicate_clusters_invariant(spark, request, tier):
+    if tier == "star":
+        request.getfixturevalue("star_tier")
     # a chain, a star, and singleton pairs
     edges = [(i, i + 1) for i in range(0, 20)] + [(100, j) for j in (101, 102, 103)]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")

@@ -360,12 +360,15 @@ def test_kmeans_round_matches_numpy(spark, data, n):
 # slow tier (r13, conftest default-skip): ~83s property sweep; split semantics stay covered by the
 # split_leakage_safe + pipeline_guard_corpus oracles and the pipeline tests
 @pytest.mark.slow
-def test_leakage_safe_split_cluster_invariant(spark, edges, weights):
+@pytest.mark.parametrize("tier", ["driver", "star"])
+def test_leakage_safe_split_cluster_invariant(spark, request, tier, edges, weights):
     """Under ANY near-dup graph, two docs connected by any path must land
     in the same split."""
     from temporai_mivdp_spark.llmdata.dedup import duplicate_clusters
     from temporai_mivdp_spark.llmdata.sampling import leakage_safe_split
 
+    if tier == "star":
+        request.getfixturevalue("star_tier")
     docs = spark.createDataFrame(
         [(i, f"d{i}") for i in range(31)], "doc_id: long, text: string"
     )
