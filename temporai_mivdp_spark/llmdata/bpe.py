@@ -51,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from temporai_mivdp_spark.llmdata.dedup import normalize_text, tokenize
+from temporai_mivdp_spark.llmdata.dedup import tokenize, words
 from temporai_mivdp_spark.session import arrow_rows
 
 if TYPE_CHECKING:
@@ -305,10 +305,7 @@ def _token_count(
         docs.select(
             id_col,
             F.explode(
-                F.filter(
-                    F.split(normalize_text(F.col(text_col)), " "),
-                    lambda t: t != "",
-                )
+                F.filter(words(F.col(text_col)), lambda t: t != "")
             ).alias("token"),
         )
         .groupBy(id_col, "token")

@@ -44,6 +44,35 @@ def normalize_text(col: Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
 
 
+def words(col: Column) -> Column:
+    """The word tokens of every llmdata operator: ``normalize_text``, then
+    a split on single spaces. Empty or whitespace-only text gives
+    ``[""]``, null text gives null. Bind the result to a column before a
+    higher-order function reads it: an inline tokenizer inside a lambda
+    re-runs the regex at every element (see text.language_id_ngram)."""
+    return F.split(normalize_text(col), " ")
+
+
+def word_ngrams(toks: Column, n: int, hashed: bool) -> Column:
+    """Every ``n``-token window of the token array ``toks`` in order, each
+    joined by single spaces, or its ``xxhash64`` when ``hashed``. Windows
+    repeat as often as they occur. Callers keep ``size(toks) >= n``:
+    below it the descending ``sequence`` reaches ``slice`` start 0 and
+    the query fails, and a null array gives empty-string windows."""
+
+    def window(i: Column) -> Column:
+        gram = F.concat_ws(" ", F.slice(toks, i + 1, n))
+        return F.xxhash64(gram) if hashed else gram
+
+    return F.transform(F.sequence(F.lit(0), F.size(toks) - n), window)
+
+
+def content_key(col: Column) -> Column:
+    """md5 of the normalized text: the exact-duplicate identity, 32 hex
+    characters, so shuffles keyed on it are fixed-width."""
+    return F.md5(normalize_text(col))
+
+
 def exact_duplicates(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -51,7 +80,7 @@ def exact_duplicates(
     (min id) and the copy count. At 100 TB, group on ``md5(normalized)``
     instead of the text itself so the shuffle is fixed-width."""
     return (
-        docs.withColumn("__k", F.md5(normalize_text(F.col(text_col))))
+        docs.withColumn("__k", content_key(F.col(text_col)))
         .groupBy("__k")
         .agg(
             F.min(id_col).alias("keep_id"),
@@ -64,7 +93,7 @@ def exact_duplicates(
 def tokenize(docs: DataFrame, text_col: str = "text", out_col: str = "token") -> DataFrame:
     """Whitespace tokens of the normalized text, one row per position."""
     return docs.withColumn(
-        out_col, F.explode(F.split(normalize_text(F.col(text_col)), " "))
+        out_col, F.explode(words(F.col(text_col)))
     )
 
 
@@ -81,16 +110,11 @@ def _shingles_raw(
     takes ``min`` over the hashes, for which duplicates are a no-op, and
     skips the distinct shuffle entirely."""
     toks = docs.select(
-        id_col, F.split(normalize_text(F.col(text_col)), " ").alias("__toks")
+        id_col, words(F.col(text_col)).alias("__toks")
     ).filter(F.size("__toks") >= n)
     return toks.select(
         id_col,
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("__toks") - n),
-                lambda i: F.concat_ws(" ", F.slice("__toks", i + 1, n)),
-            )
-        ).alias("shingle"),
+        F.explode(word_ngrams(F.col("__toks"), n, hashed=False)).alias("shingle"),
     )
 
 
@@ -100,33 +124,6 @@ def shingles(
     """Distinct word n-gram shingles per document: (id, shingle)."""
     return _shingles_raw(docs, n=n, text_col=text_col, id_col=id_col).dropDuplicates(
         [id_col, "shingle"]
-    )
-
-
-def _hashed_shingle_sets(toks: DataFrame, n: int, id_col: str) -> DataFrame:
-    """(id, __set) with __set = the DISTINCT xxhash64 shingles of the
-    document, computed ROW-LOCALLY with ``array_distinct`` in the same
-    codegen stage as the shingle transform.
-
-    This is the per-document shingle set that earlier rounds built as
-    ``explode -> groupBy(id).agg(collect_set)`` — an ObjectHashAggregate
-    pair whose hash map over every shingle row was the measured
-    external-sort cost at the 100x cell (SCALING.md round 11). A
-    document's shingles all live in one row's array, so the set is a
-    row-local fact: ``array_distinct`` produces the identical set with
-    zero aggregation, zero shuffle buffer, and no object-agg fallback
-    path. Requires ``id_col`` to uniquely identify documents (the dedup
-    contract throughout this module): duplicate-id rows would previously
-    have had their sets UNIONED by the groupBy, whereas here each row
-    keeps its own set."""
-    return toks.select(
-        id_col,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size("__toks") - n),
-                lambda i: F.xxhash64(F.concat_ws(" ", F.slice("__toks", i + 1, n))),
-            )
-        ).alias("__set"),
     )
 
 
@@ -170,10 +167,12 @@ def ngram_jaccard_pairs(
     # the portable md5-based family.) ``array_distinct`` is the set and
     # ``F.size`` its cardinality, so the (id, sz, shingle) rows come out
     # of the scan's codegen stage with no shuffle.
-    # Contract: id_col uniquely identifies documents (see
-    # _hashed_shingle_sets; every caller in this repo dedups by a key).
+    # A document's shingles all live in one row's array, so its set is a
+    # row-local fact: no aggregation and no per-doc object-agg buffer.
+    # Contract: id_col uniquely identifies documents (every caller in
+    # this repo dedups by a key); duplicate-id rows keep separate sets.
     toks = docs.select(
-        id_col, F.split(normalize_text(F.col(text_col)), " ").alias("__toks")
+        id_col, words(F.col(text_col)).alias("__toks")
     ).filter(F.size("__toks") >= n)
     # explode_outer, NOT explode: InferFiltersFromGenerate would add
     # size(__set) > 0 for a plain explode and push the whole
@@ -182,7 +181,11 @@ def ngram_jaccard_pairs(
     # single-threaded on the scan (measured 2.4x on the whole query).
     # Sets are provably non-empty (size(__toks) >= n), so outer vs inner
     # is a no-op on the data.
-    sh = _hashed_shingle_sets(toks, n, id_col).select(
+    sets = toks.select(
+        id_col,
+        F.array_distinct(word_ngrams(F.col("__toks"), n, hashed=True)).alias("__set"),
+    )
+    sh = sets.select(
         id_col, F.size("__set").alias("__sz"), F.explode_outer("__set").alias("shingle")
     )
     if max_shingle_freq is not None:
@@ -462,7 +465,7 @@ def incremental_exact_novel(
     (min id wins). Returns the surviving rows plus ``key_col`` so the
     caller appends them to the seen-set — constant state per doc, no
     corpus rescan."""
-    keyed = new_docs.withColumn(key_col, F.md5(normalize_text(F.col(text_col))))
+    keyed = new_docs.withColumn(key_col, content_key(F.col(text_col)))
     w_min = F.min(id_col).over(Window.partitionBy(key_col))
     in_shard_kept = (
         keyed.withColumn("__keep", w_min)
@@ -492,29 +495,28 @@ def benchmark_contamination(
 
     Scale shape: the benchmark side is eval-set sized (thousands of
     rows), so its distinct shingle sets broadcast; the corpus side's
-    distinct sets are ROW-LOCAL ``array_distinct`` facts
-    (``_hashed_shingle_sets`` — zero aggregation, no per-doc object-agg
-    buffer; round 12, same move as ``ngram_jaccard_pairs``) and the
-    corpus never meets itself — cost is corpus-linear, unlike the
-    near-dup self-joins. ``explode_outer`` for the same
+    distinct sets are ROW-LOCAL ``array_distinct`` facts (zero
+    aggregation, no per-doc object-agg buffer; same move as
+    ``ngram_jaccard_pairs``) and the corpus never meets itself — cost
+    is corpus-linear, unlike the near-dup self-joins. ``explode_outer`` for the same
     InferFiltersFromGenerate reason documented there. Shingle identity
     goes through ``xxhash64`` (only set cardinalities survive into the
     output, so any collision-free hash gives the same answer — same
     argument as ``ngram_jaccard_pairs``).
     """
-    btoks = bench.select(
-        F.col(id_col).alias("__bid"),
-        F.split(normalize_text(F.col(text_col)), " ").alias("__toks"),
-    ).filter(F.size("__toks") >= n)
-    bsets = _hashed_shingle_sets(btoks, n, "__bid").select(
+
+    def shingle_sets(side: DataFrame, key: str) -> DataFrame:
+        # (key, __set): the distinct hashed shingles of each >= n-token doc
+        toks = side.select(
+            F.col(id_col).alias(key), words(F.col(text_col)).alias("__toks")
+        ).filter(F.size("__toks") >= n)
+        sets = F.array_distinct(word_ngrams(F.col("__toks"), n, hashed=True))
+        return toks.select(key, sets.alias("__set"))
+
+    bsets = shingle_sets(bench, "__bid").select(
         "__bid", F.size("__set").alias("__bsz"), F.explode_outer("__set").alias("__sh")
     )
-    dtoks = docs.select(
-        id_col, F.split(normalize_text(F.col(text_col)), " ").alias("__toks")
-    ).filter(F.size("__toks") >= n)
-    dsh = _hashed_shingle_sets(dtoks, n, id_col).select(
-        id_col, F.explode_outer("__set").alias("__sh")
-    )
+    dsh = shingle_sets(docs, id_col).select(id_col, F.explode_outer("__set").alias("__sh"))
     # long/long division -> IEEE double, bit-identical across engines;
     # the threshold compare must happen on that exact value (the DuckDB
     # oracle casts to DOUBLE the same way).
@@ -579,8 +581,8 @@ def _bloom_positions(shingle: Column, m_bits: int, k_hashes: int) -> list[Column
     return [F.pmod(b1 + j * b2, F.lit(m_bits)) for j in range(k_hashes)]
 
 
-def _bloom_probe(shingle: Column, words: Column, m_bits: int, k_hashes: int) -> Column:
-    """True iff every probe bit of ``shingle`` is set in ``words`` (the
+def _bloom_probe(shingle: Column, bits: Column, m_bits: int, k_hashes: int) -> Column:
+    """True iff every probe bit of ``shingle`` is set in ``bits`` (the
     bloom's word array; bit i of the index lives at bit ``i % 64`` of
     word ``i // 64``). The single probe definition both consumers
     (``bloom_contamination``, ``bloom_hit_columns``) share — the word
@@ -590,11 +592,22 @@ def _bloom_probe(shingle: Column, words: Column, m_bits: int, k_hashes: int) -> 
     for p in _bloom_positions(shingle, m_bits, k_hashes):
         cond = cond & (
             F.bit_get(
-                F.element_at(words, (p / 64).cast("int") + 1), (p % 64).cast("int")
+                F.element_at(bits, (p / 64).cast("int") + 1), (p % 64).cast("int")
             )
             == 1
         )
     return cond
+
+
+def _bloom_literal(bloom: DataFrame) -> tuple[int, int, Column]:
+    """``(m_bits, k_hashes, words)`` of a ``shingle_bloom`` row, the words
+    as ONE ``array<bigint>`` literal. Collects the row at plan-build
+    time."""
+    row = bloom.select("m_bits", "k_hashes", "words").first()
+    if row is None:
+        raise ValueError("bloom DataFrame is empty — build it with shingle_bloom()")
+    bits = F.lit([int(w) for w in row["words"]]).cast("array<bigint>")
+    return int(row["m_bits"]), int(row["k_hashes"]), bits
 
 
 def shingle_bloom(
@@ -611,11 +624,12 @@ def shingle_bloom(
 
     Why a bloom next to ``benchmark_contamination``'s exact hash join:
     the exact path broadcasts the benchmark's distinct shingle *hashes*
-    (8 bytes each) and charges the corpus one collect_set shuffle. When
-    the eval suite grows to tens of millions of n-grams, the bloom is
-    the ~64x smaller ship (m_bits is chosen, not data-sized) and — more
+    (8 bytes each), hash-joins every distinct corpus shingle against
+    them and shuffles the hits for a per-(doc, example) count. When the
+    eval suite grows to tens of millions of n-grams, the bloom is the
+    ~64x smaller ship (m_bits is chosen, not data-sized) and — more
     importantly — lets the corpus side probe *row-locally* with zero
-    joins and zero per-shingle shuffle (see ``bloom_contamination``).
+    joins (see ``bloom_contamination``).
     False positives only (rate ~ (1-e^{-kn/m})^k), never false
     negatives: a clean verdict from the bloom is definitive.
 
@@ -692,12 +706,8 @@ def bloom_contamination(
     probe and measured ~8x slower than this literal form at sf0.1 —
     same lesson as the LSH literal planes.)
     """
-    row = bloom.select("m_bits", "k_hashes", "words").first()
-    if row is None:
-        raise ValueError("bloom DataFrame is empty — build it with shingle_bloom()")
-    m_bits, k_hashes = int(row["m_bits"]), int(row["k_hashes"])
-    words = F.lit([int(w) for w in row["words"]]).cast("array<bigint>")
-    hit = _bloom_probe(F.col("shingle"), words, m_bits, k_hashes)
+    m_bits, k_hashes, bits = _bloom_literal(bloom)
+    hit = _bloom_probe(F.col("shingle"), bits, m_bits, k_hashes)
     per_doc = (
         _shingles_raw(docs, n=n, text_col=text_col, id_col=id_col)
         .groupBy(id_col)
@@ -783,24 +793,18 @@ def bloom_hit_columns(
     the bloom row at plan-build time (same contract as
     ``bloom_contamination``).
     """
-    row = bloom.select("m_bits", "k_hashes", "words").first()
-    if row is None:
-        raise ValueError("bloom DataFrame is empty — build it with shingle_bloom()")
-    m_bits, k_hashes = int(row["m_bits"]), int(row["k_hashes"])
-    words = F.lit([int(w) for w in row["words"]]).cast("array<bigint>")
+    m_bits, k_hashes, bits = _bloom_literal(bloom)
 
     def is_hit(s: Column) -> Column:
-        return _bloom_probe(s, words, m_bits, k_hashes)
+        return _bloom_probe(s, bits, m_bits, k_hashes)
 
-    toks = F.split(normalize_text(F.col(text_col)), " ")
+    # tokens bound to a column first: the window lambda then reads an
+    # attribute instead of re-running the normalize regex per position
+    toks = F.col("__toks")
     spans = F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - n),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-        ),
+        F.size(toks) >= n, word_ngrams(toks, n, hashed=False)
     ).otherwise(F.array().cast("array<string>"))
-    out = docs.withColumn("__spans", spans)
+    out = docs.withColumn("__toks", words(F.col(text_col))).withColumn("__spans", spans)
     return (
         out.withColumn("n_shingles", F.size("__spans").cast("long"))
         .withColumn(
@@ -811,7 +815,7 @@ def bloom_hit_columns(
             F.when(F.col("n_shingles") > 0, F.col("n_bloom_hits") / F.col("n_shingles"))
             .otherwise(F.lit(0.0)),
         )
-        .drop("__spans")
+        .drop("__toks", "__spans")
     )
 
 
@@ -902,6 +906,20 @@ def repeated_spans(
     return examples.select("span_hash", "n_docs", "n_occurrences", "span")
 
 
+def _sized_span_hashes(
+    docs: DataFrame, n: int, text_col: str, id_col: str
+) -> tuple[DataFrame, Column]:
+    """The prefix ``span_coverage`` and ``remove_duplicated_spans`` share:
+    the non-null-text docs as ``(id, __toks, n_tokens)``, and the column
+    of their ``n``-token span hashes in position order, for rows with
+    ``n_tokens >= n``."""
+    toks = docs.filter(F.col(text_col).isNotNull()).select(
+        id_col, words(F.col(text_col)).alias("__toks")
+    )
+    sized = toks.select(id_col, "__toks", F.size("__toks").alias("n_tokens"))
+    return sized, word_ngrams(F.col("__toks"), n, hashed=True)
+
+
 def span_coverage(
     docs: DataFrame,
     n: int = 10,
@@ -955,32 +973,13 @@ def span_coverage(
        sum(min(n, p_next − p)) with n for the last — one ``lead`` and
        one aggregate.
     """
-    toks = docs.filter(F.col(text_col).isNotNull()).select(
-        id_col, F.split(normalize_text(F.col(text_col)), " ").alias("__toks")
-    )
-    sized = toks.select(id_col, "__toks", F.size("__toks").alias("n_tokens"))
-    spans = sized.filter(F.col("n_tokens") >= n).select(
-        id_col,
-        "n_tokens",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("__toks") - n),
-                lambda i: F.xxhash64(F.concat_ws(" ", F.slice("__toks", i + 1, n))),
-            )
-        ).alias("pos", "__h"),
+    sized, span_hashes = _sized_span_hashes(docs, n, text_col, id_col)
+    long_docs = sized.filter(F.col("n_tokens") >= n)
+    spans = long_docs.select(
+        id_col, "n_tokens", F.posexplode(span_hashes).alias("pos", "__h")
     )
     survivors = (
-        sized.filter(F.col("n_tokens") >= n)
-        .select(
-            F.explode_outer(
-                F.array_distinct(
-                    F.transform(
-                        F.sequence(F.lit(0), F.size("__toks") - n),
-                        lambda i: F.xxhash64(F.concat_ws(" ", F.slice("__toks", i + 1, n))),
-                    )
-                )
-            ).alias("__h")
-        )
+        long_docs.select(F.explode_outer(F.array_distinct(span_hashes)).alias("__h"))
         .groupBy("__h")
         .agg(F.count(F.lit(1)).alias("__nd"))
         .filter(F.col("__nd") >= min_docs)
@@ -1042,29 +1041,20 @@ def remove_duplicated_spans(
     with every other dedup operator; the un-normalized original is the
     caller's to keep). Docs shorter than ``n`` tokens pass through.
 
-    Scale shape: identical to ``span_coverage`` through survivor
-    detection (row-local span hashes, fixed-width (hash, id, pos)
-    shuffles, two-level doc-count — no posting lists), plus a min-id
-    per hash carried by the same aggregate. Removable positions then
-    come back to each doc ONCE as a collect_set bounded by document
-    length (the per-doc bound every other collect in this file relies
-    on), and the rewrite is one row-local higher-order filter — the
-    position set is expanded from merged intervals, so membership is
-    O(1) array_contains against at most n_tokens entries. Nothing
-    downstream of the survivor join shuffles anything wider than
-    (id, pos)."""
-    toks = docs.filter(F.col(text_col).isNotNull()).select(
-        id_col, F.split(normalize_text(F.col(text_col)), " ").alias("__toks")
-    )
-    sized = toks.select(id_col, "__toks", F.size("__toks").alias("n_tokens"))
+    Scale shape: ``span_coverage``'s tokenize and row-local span hashes
+    (fixed-width (hash, id, pos) shuffles, no posting lists), but
+    survivor detection is a two-level doc-count over the raw span rows —
+    (hash, doc) then hash — whose second level also carries each hash's
+    min id, the keeper. Removable positions then come back to each doc
+    ONCE as one ``array_distinct`` of the expanded ``[pos, pos+n)``
+    intervals, bounded by document length (the per-doc bound every
+    other collect in this file relies on), and the rewrite is one
+    row-local higher-order filter: an ``array_contains`` per token
+    against at most n_tokens entries. Nothing downstream of the
+    survivor join shuffles anything wider than (id, pos)."""
+    sized, span_hashes = _sized_span_hashes(docs, n, text_col, id_col)
     spans = sized.filter(F.col("n_tokens") >= n).select(
-        id_col,
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("__toks") - n),
-                lambda i: F.xxhash64(F.concat_ws(" ", F.slice("__toks", i + 1, n))),
-            )
-        ).alias("pos", "__h"),
+        id_col, F.posexplode(span_hashes).alias("pos", "__h")
     )
     survivors = (
         spans.groupBy("__h", id_col)

@@ -36,7 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from temporai_mivdp_spark.llmdata.dedup import normalize_text
+from temporai_mivdp_spark.llmdata.dedup import words
 
 #: integer scaling for log-ratio scores: 1e-6 nat resolution, exact
 #: 64-bit sums for any realistic document length
@@ -50,7 +50,7 @@ def _token_buckets(
     32-bit md5 hash → modulo. Row-local until the caller aggregates."""
     toks = docs.select(
         F.col(id_col),
-        F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("__tok"),
+        F.explode(words(F.col(text_col))).alias("__tok"),
     ).filter(F.col("__tok") != "")
     bucket = (
         F.conv(F.substring(F.md5(F.col("__tok")), 1, 8), 16, 10).cast("long")

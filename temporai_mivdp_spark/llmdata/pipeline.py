@@ -141,8 +141,9 @@ def guard_corpus(
       The scale default (the bloom's xxhash64 probes are Spark-native,
       so this path is test-covered rather than oracle-mirrored).
     * ``exact=True`` — ``benchmark_contamination``: per-doc max n-gram
-      CONTAINMENT against each benchmark example (md5-hashed shingles,
-      bit-portable to the DuckDB oracle — the ``pipeline_guard_corpus``
+      CONTAINMENT against each benchmark example (hashed shingles whose
+      set sizes alone reach the output, so it matches the DuckDB oracle
+      bit for bit — the ``pipeline_guard_corpus``
       catalog entry hash-checks this whole composition); flag columns
       ``n_bench_hits``/``max_containment``, contaminated when
       ``n_bench_hits >= min_hits`` at ``containment_threshold``.

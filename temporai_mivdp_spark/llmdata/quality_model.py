@@ -39,7 +39,7 @@ from functools import lru_cache
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from temporai_mivdp_spark.llmdata.dedup import normalize_text
+from temporai_mivdp_spark.llmdata.dedup import normalize_text, words
 from temporai_mivdp_spark.llmdata.text import STOPWORDS
 
 #: feature names in scoring order — the weight vector indexes this list
@@ -71,7 +71,7 @@ def quality_feature_vector(
     with_toks = docs.select(
         id_col,
         t.alias("__t"),
-        F.split(normalize_text(t), " ").alias("__toks"),
+        words(t).alias("__toks"),
     )
     n_chars = F.length("__t")
     # array_size, NOT size: size(null) is -1 (legacy sentinel), which

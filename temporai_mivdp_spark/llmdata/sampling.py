@@ -511,9 +511,9 @@ def chunk_documents(
     chunk-index sequence, slice — so the op adds ZERO shuffles to
     whatever plan it is embedded in; at 100 TB it is a flat map over
     the scan, and the output inherits the input's partitioning by
-    ``id_col`` prefix. Tokenization matches the dedup family
-    (``normalize_text`` + single-space split) so chunk boundaries agree
-    with shingle/token accounting elsewhere in the pipeline.
+    ``id_col`` prefix. Tokens come from ``dedup.words``, as in the
+    dedup family, so chunk boundaries agree with shingle/token
+    accounting elsewhere in the pipeline.
 
     Chunk starts sit at multiples of ``stride = chunk_size - overlap``;
     the final chunk is the ragged tail (shorter than ``chunk_size``,
@@ -524,11 +524,9 @@ def chunk_documents(
     if not 0 <= overlap < chunk_size:
         raise ValueError(f"need 0 <= overlap < chunk_size, got {overlap=} {chunk_size=}")
     stride = chunk_size - overlap
-    from .dedup import normalize_text
+    from .dedup import words
 
-    toks = docs.select(
-        id_col, F.split(normalize_text(F.col(text_col)), " ").alias("__toks")
-    )
+    toks = docs.select(id_col, words(F.col(text_col)).alias("__toks"))
     # array_size (null-propagating), not size (-1 sentinel): a null doc
     # must produce ZERO chunks — with size(null) = -1 the when() below
     # counted one chunk of null text (edgecase_check catch); with a null

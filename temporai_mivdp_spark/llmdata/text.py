@@ -18,7 +18,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from temporai_mivdp_spark.llmdata.dedup import normalize_text, tokenize
+from temporai_mivdp_spark.llmdata.dedup import (
+    content_key,
+    normalize_text,
+    tokenize,
+    word_ngrams,
+    words,
+)
 from temporai_mivdp_spark.session import arrow_rows
 
 if TYPE_CHECKING:
@@ -45,16 +51,16 @@ def token_count(col: Column) -> Column:
     DuckDB oracles (``len(NULL) IS NULL``) and every downstream consumer
     expect null for null text (adversarial-corpus harness,
     tools/edgecase_check.py); in filters both behave as exclusion."""
-    return F.array_size(F.split(normalize_text(col), " "))
+    return F.array_size(words(col))
 
 
 def bpe_token_estimate(col: Column) -> Column:
     """BPE-ish token estimate without a vocab file: split on word
     boundaries/punctuation/digit runs and charge long words one token per
     4 chars (the common LLM rule of thumb). Deterministic + portable."""
-    words = F.split(normalize_text(col), r"[^a-z0-9]+")
+    pieces = F.split(normalize_text(col), r"[^a-z0-9]+")
     per_word = F.transform(
-        words, lambda w: F.when(F.length(w) == 0, 0).otherwise(
+        pieces, lambda w: F.when(F.length(w) == 0, 0).otherwise(
             F.ceil(F.length(w) / F.lit(4.0)).cast("long")
         )
     )
@@ -174,7 +180,7 @@ def repetition_features(
     coalesce to 0).
     """
     toks = docs.select(
-        id_col, F.split(normalize_text(F.col(text_col)), " ").alias("__toks")
+        id_col, words(F.col(text_col)).alias("__toks")
     ).filter(F.size("__toks") >= n)
     # the gram identity is all the aggregate needs (max/sum/count of
     # per-gram counts are invariant to WHICH collision-free value names a
@@ -182,13 +188,7 @@ def repetition_features(
     # trick as ngram_jaccard_pairs: the (id, gram) exchange carries
     # fixed-width keys instead of n-word strings.
     grams = toks.select(
-        id_col,
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("__toks") - n),
-                lambda i: F.xxhash64(F.concat_ws(" ", F.slice("__toks", i + 1, n))),
-            )
-        ).alias("__g"),
+        id_col, F.explode(word_ngrams(F.col("__toks"), n, hashed=True)).alias("__g")
     )
     # one exchange for both aggregation levels: hash-partitioning by the
     # doc id alone satisfies the clustering requirement of the
@@ -343,9 +343,7 @@ def encode_tokens(
     toks = docs.select(
         id_col,
         F.posexplode(
-            F.filter(
-                F.split(normalize_text(F.col(text_col)), " "), lambda t: t != ""
-            )
+            F.filter(words(F.col(text_col)), lambda t: t != "")
         ).alias("__pos", "token"),
     )
     mapped = toks.join(F.broadcast(vocab.select("token", "token_id")), "token", "left")
@@ -448,6 +446,18 @@ def strip_common_lines(
     )
 
 
+def _bigrams(toks: Column) -> Column:
+    """Every adjacent token pair of ``toks`` in order, as ``(w1, w2)``
+    structs. Callers keep ``size(toks) >= 2``."""
+    return F.transform(
+        F.sequence(F.lit(0), F.size(toks) - 2),
+        lambda i: F.struct(
+            F.element_at(toks, i + 1).alias("w1"),
+            F.element_at(toks, i + 2).alias("w2"),
+        ),
+    )
+
+
 def bigram_lm(
     clean: DataFrame,
     text_col: str = "text",
@@ -475,9 +485,9 @@ def bigram_lm(
     nonblank = clean.filter(
         F.coalesce(normalize_text(F.col(text_col)), F.lit("")) != ""
     )
-    toks = nonblank.select(
-        F.split(normalize_text(F.col(text_col)), " ").alias("__toks")
-    ).filter(F.size("__toks") > 0)
+    toks = nonblank.select(words(F.col(text_col)).alias("__toks")).filter(
+        F.size("__toks") > 0
+    )
     uni = (
         toks.select(F.explode("__toks").alias("w"))
         .groupBy("w")
@@ -488,17 +498,7 @@ def bigram_lm(
     # and element_at faults
     big = (
         toks.filter(F.size("__toks") >= 2)
-        .select(
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.size("__toks") - 2),
-                    lambda i: F.struct(
-                        F.element_at("__toks", i + 1).alias("w1"),
-                        F.element_at("__toks", i + 2).alias("w2"),
-                    ),
-                )
-            ).alias("__b")
-        )
+        .select(F.explode(_bigrams(F.col("__toks"))).alias("__b"))
         .select("__b.w1", "__b.w2")
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("__c12"))
@@ -563,20 +563,9 @@ def perplexity(
     unigrams = lm.filter(F.col("w1").isNull()).select(
         F.col("w2").alias("__uw"), F.col("logp").alias("__ulogp")
     )
-    toks = docs.select(
-        id_col, F.split(normalize_text(F.col(text_col)), " ").alias("__toks")
-    )
+    toks = docs.select(id_col, words(F.col(text_col)).alias("__toks"))
     pairs = toks.filter(F.size("__toks") >= 2).select(
-        id_col,
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("__toks") - 2),
-                lambda i: F.struct(
-                    F.element_at("__toks", i + 1).alias("w1"),
-                    F.element_at("__toks", i + 2).alias("w2"),
-                ),
-            )
-        ).alias("__b"),
+        id_col, F.explode(_bigrams(F.col("__toks"))).alias("__b")
     ).select(id_col, "__b.w1", "__b.w2")
     scored = (
         pairs.join(bigrams, ["w1", "w2"], "left")
@@ -764,7 +753,7 @@ def pmi_bigrams(
     corpus totals are 1-row aggregates cross-joined in-plan; the top-k
     is ``orderBy().limit(k)`` — TakeOrderedAndProject, no global sort.
     """
-    t = F.split(normalize_text(F.col(text_col)), " ")
+    t = words(F.col(text_col))
     toks = (
         docs.filter(normalize_text(F.col(text_col)) != "")
         .select(t.alias("t"))
@@ -1071,11 +1060,10 @@ def fingerprint(
     shuffle carries 8-byte gram hashes). Docs whose text normalizes to
     null keep a row with null prints via the left join, matching the
     old row-local form."""
-    toks = F.split(normalize_text(F.col(text_col)), " ")
     base = docs.select(
         id_col,
-        F.md5(normalize_text(F.col(text_col))).alias("content_md5"),
-        toks.alias("__toks"),
+        content_key(F.col(text_col)).alias("content_md5"),
+        words(F.col(text_col)).alias("__toks"),
     )
     grams = base.filter(F.size("__toks") >= 4).select(
         # the >=4 guard keeps the print a true 4-gram signature: shorter
@@ -1083,12 +1071,7 @@ def fingerprint(
         # oracle's len==4 CASE agrees — edgecase_check caught the old
         # form hashing partial shingles for 1-3-token docs)
         id_col,
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("__toks") - 4),
-                lambda i: F.concat_ws(" ", F.slice("__toks", i + 1, 4)),
-            )
-        ).alias("__g"),
+        F.explode(word_ngrams(F.col("__toks"), 4, hashed=False)).alias("__g"),
     ).select(
         id_col,
         F.conv(F.substring(F.md5("__g"), 1, 8), 16, 10).cast("long").alias("__h"),
@@ -1118,7 +1101,7 @@ def corpus_stats(
     t = F.col(text_col)
     return docs.groupBy(group_col).agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.approx_count_distinct(F.md5(normalize_text(t))).alias("approx_distinct"),
+        F.approx_count_distinct(content_key(t)).alias("approx_distinct"),
         F.sum(token_count(t)).cast("long").alias("n_tokens"),
         F.percentile_approx(
             F.length(t).cast("double"), F.array(F.lit(0.5), F.lit(0.9), F.lit(0.99))

@@ -29,7 +29,8 @@ from temporai_mivdp_spark.queries import (
     _t,
 )
 
-#: DuckDB expression for the normalized text (mirror of dedup.normalize_text)
+#: DuckDB expression for the normalized text, the oracle's copy of
+#: dedup.normalize_text; ``string_split({_NORM}, ' ')`` mirrors dedup.words
 _NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
 
 
@@ -38,10 +39,10 @@ def _augmented(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The union is fanned out by doc_id (sources.fan_out — a structural
     no-op when the scan already has parallelism): the consumers are the
-    dedup operators, whose first aggregation is doc_id-keyed
-    (collect_set / signature min), so the one adaptive exchange both
-    parallelizes the tokenize/shingle map side and is REUSED as those
-    aggregations' required partitioning. Composite consumers
+    dedup operators, so the one adaptive exchange parallelizes their
+    tokenize/shingle map side, and where the first aggregation is
+    doc_id-keyed (the MinHash signature min) it is REUSED as that
+    aggregation's required partitioning. Composite consumers
     (pipeline_guard_corpus) re-derive shingles in several subtrees —
     each sits above this same exchange, which Spark's exchange reuse
     dedups at runtime (ReusedExchange), where the previous shape
@@ -1258,7 +1259,7 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters = doubled.select(
         "doc_id",
         F.min("doc_id")
-        .over(Window.partitionBy(F.md5(dedup.normalize_text(F.col("text")))))
+        .over(Window.partitionBy(dedup.content_key(F.col("text"))))
         .alias("cluster_id"),
     )
     out = sampling.leakage_safe_split(
@@ -1656,7 +1657,7 @@ def pipeline_docs_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubled = docs.unionByName(
         docs.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
     )
-    keep_w = W.partitionBy(F.md5(dedup.normalize_text(F.col("text"))))
+    keep_w = W.partitionBy(dedup.content_key(F.col("text")))
     kept = (
         doubled.withColumn("__keep_id", F.min("doc_id").over(keep_w))
         .filter(F.col("doc_id") == F.col("__keep_id"))
@@ -2290,7 +2291,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("text"),
     )
     seen = docs.select(
-        F.md5(dedup.normalize_text(F.col("text"))).alias("content_key")
+        dedup.content_key(F.col("text")).alias("content_key")
     ).distinct()
     novel = dedup.incremental_exact_novel(new_shard, seen)
     index = dedup.lsh_band_index(docs, num_hashes=8, bands=4)

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import math
 import random
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -21,6 +22,68 @@ def docs(spark):
         (5, "el rapido zorro marron salta sobre el perro y los gatos"),
     ]
     return spark.createDataFrame(rows, "doc_id: long, text: string")
+
+
+#: Java's ``\s`` (the engine's regex class), NOT Python's ``str.split()``
+#: set: NBSP and the \x1c-\x1f separators are word characters to Spark
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+
+_TOKENIZER_CASES = [
+    None,
+    "",
+    "  \t ",
+    "\t\n\r A  b\x0bc\fd \r\n",
+    "x y",
+    "x y z",
+    "a b a b a b",
+    "nbsp\u00a0joins x\x1cy",
+]
+
+
+@pytest.mark.parametrize("n", [1, 2, 3])
+def test_tokenizer_helpers_match_reference(spark, n):
+    """``words``/``word_ngrams``/``content_key`` against a plain-Python
+    reference, with ``word_ngrams`` under the ``size >= n`` guard every
+    caller applies; the hashed windows are ``xxhash64`` of the string
+    windows, element by element."""
+    import hashlib
+
+    def ref_words(t):
+        return None if t is None else _JAVA_WS.sub(" ", t.lower()).strip(" ").split(" ")
+
+    df = spark.createDataFrame([(t,) for t in _TOKENIZER_CASES], "text: string")
+    toks = F.col("toks")
+    guard = F.size(toks) >= n
+    rows = (
+        df.withColumn("toks", dedup.words(F.col("text")))
+        .select(
+            "text",
+            "toks",
+            F.when(guard, dedup.word_ngrams(toks, n, hashed=False)).alias("grams"),
+            F.when(guard, dedup.word_ngrams(toks, n, hashed=True)).alias("hashed"),
+            F.when(
+                guard,
+                F.transform(dedup.word_ngrams(toks, n, hashed=False), lambda g: F.xxhash64(g)),
+            ).alias("rehashed"),
+            dedup.content_key(F.col("text")).alias("key"),
+        )
+        .collect()
+    )
+    assert len(rows) == len(_TOKENIZER_CASES)
+    for r in rows:
+        want = ref_words(r.text)
+        assert r.toks == want, r.text
+        grams = (
+            None
+            if want is None or len(want) < n
+            else [" ".join(want[i : i + n]) for i in range(len(want) - n + 1)]
+        )
+        assert r.grams == grams, r.text
+        assert r.hashed == r.rehashed, r.text
+        assert (r.hashed is None) == (grams is None), r.text
+        assert r.key == (
+            None if r.text is None else hashlib.md5(" ".join(want).encode()).hexdigest()
+        ), r.text
 
 
 def test_exact_duplicates(spark, docs):

@@ -156,6 +156,27 @@ def test_pinned_extras_fingerprints_current(spark):
     assert not stale, f"plan changed without PLANS.json update: {stale}"
 
 
+def assert_no_regex_in_lambdas(df) -> None:
+    """No ``regexp_replace`` inside any ``lambdafunction`` of ``df``'s
+    optimized plan. A normalize/tokenize expression inlined into a
+    higher-order function's lambda re-runs its regex at every element,
+    O(len^2) per document; a lambda must read a bound attribute."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    bodies = []
+    start = plan.find("lambdafunction(")
+    while start >= 0:
+        depth = 0
+        for end in range(start + len("lambdafunction"), len(plan)):
+            depth += {"(": 1, ")": -1}.get(plan[end], 0)
+            if depth == 0:
+                break
+        bodies.append(plan[start : end + 1])
+        start = plan.find("lambdafunction(", start + 1)
+    assert bodies, "no lambdafunction in the optimized plan"
+    inlined = [b for b in bodies if "regexp_replace" in b]
+    assert not inlined, inlined[0][:300]
+
+
 def test_langid_generate_reads_bound_attribute(spark):
     """Regression pin for the O(len^2) trigram explode: the Generate's
     transform lambda must reference the pre-materialized normalized-text
@@ -164,13 +185,25 @@ def test_langid_generate_reads_bound_attribute(spark):
     13.5s -> 2.6s at sf0.1 when fixed). Also pins the weight table as a
     broadcast dimension, not a plan literal or a shuffled join side."""
     df = QUERIES["text_langid"](spark, SF_SMOKE)
-    s = df._jdf.queryExecution().executedPlan().toString()
-    gen_lines = [ln for ln in s.split("\n") if "Generate explode(transform" in ln]
-    assert gen_lines, "trigram Generate missing from plan"
-    for ln in gen_lines:
-        assert "regexp_replace" not in ln, ln[:200]
+    assert_no_regex_in_lambdas(df)
     summary = plans.plan_summary(df)
     assert summary.get("BroadcastHashJoin", 0) >= 1, summary
+
+
+def test_bloom_hit_columns_lambdas_read_bound_tokens(spark):
+    """Same pin for ``dedup.bloom_hit_columns``: its n-gram window lambda
+    reads the bound token array, not the normalize regex."""
+    from pyspark.sql import functions as F
+
+    from temporai_mivdp_spark.llmdata import dedup
+
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps"), (2, "a b c d")], "doc_id: long, text: string"
+    )
+    bloom = dedup.shingle_bloom(
+        docs.filter(F.col("doc_id") == 1), n=3, m_bits=1 << 8, k_hashes=2
+    )
+    assert_no_regex_in_lambdas(dedup.bloom_hit_columns(docs, bloom, n=3))
 
 
 def test_mojibake_udf_runs_only_behind_marker_filter(spark):
