@@ -145,16 +145,21 @@ def ngram_jaccard_pairs(
     a quadratic bucket (and contributes almost no discriminative signal).
     Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
 
-    The cap is exact and applied BEFORE the self-join: the over-cap
-    shingles are counted (one fixed-width aggregate over the shingle
-    rows) and broadcast left-anti-joined away, so a hot shingle never
-    reaches the join. The set sizes keep every shingle, capped or not.
-    The shingle rows are row-local (no aggregate below them), so when
-    the join shuffles, its second side reuses the first side's exchange:
-    the shingle subtree runs once for the join and once for the count.
-    With ``max_shingle_freq=None`` a shingle shared by L docs emits its
-    L(L-1)/2 pairs out of the join, which buffers (and spills) one key's
-    rows at a time; no buffer holds the pairs.
+    The tokenize -> shingle map runs once per execution: its
+    ``(id, size, shingle)`` rows are shuffled once on the shingle, and
+    both join sides read that one exchange. The cap is exact and applied
+    there, BEFORE the pairs are built: a window ``count`` over each
+    shingle's partition is its doc frequency, and over-cap shingles are
+    dropped from the join's right side. That suffices, because the inner
+    join emits a shingle's pairs only when both sides hold it, so a hot
+    shingle never yields a pair. The set sizes keep every shingle, capped
+    or not. The window buffers one shingle's rows at a time: up to
+    ``spark.sql.windowExec.buffer.in.memory.threshold`` rows in an array,
+    then an external sorter that spills under memory pressure or past
+    ``spark.sql.windowExec.buffer.spill.threshold`` rows. With
+    ``max_shingle_freq=None`` there is no window, and a shingle shared by
+    L docs emits its L(L-1)/2 pairs out of the join, which buffers (and
+    spills) one key's rows at a time; no buffer holds the pairs.
     """
     # hash-then-dedup: the 64-bit shingle hash is computed row-locally in
     # the same codegen stage as the explode, so every shuffle carries 8
@@ -171,36 +176,48 @@ def ngram_jaccard_pairs(
     # row-local fact: no aggregation and no per-doc object-agg buffer.
     # Contract: id_col uniquely identifies documents (every caller in
     # this repo dedups by a key); duplicate-id rows keep separate sets.
-    toks = docs.select(
-        id_col, words(F.col(text_col)).alias("__toks")
-    ).filter(F.size("__toks") >= n)
-    # explode_outer, NOT explode: InferFiltersFromGenerate would add
-    # size(__set) > 0 for a plain explode and push the whole
-    # tokenize+shingle+array_distinct expression below the fan-out
-    # exchange into the scan filter — re-running the heaviest map work
-    # single-threaded on the scan (measured 2.4x on the whole query).
-    # Sets are provably non-empty (size(__toks) >= n), so outer vs inner
-    # is a no-op on the data.
+    toks = docs.select(id_col, words(F.col(text_col)).alias("__toks"))
+    # The short-doc guard is a CASE inside the projection, not a filter on
+    # size(__toks): a filter would be pushed through the tokenize Project
+    # into the scan's DataFilters, running the normalize regex there and
+    # again above it. explode_outer, NOT explode: InferFiltersFromGenerate
+    # would add size(__set) > 0 for a plain explode and push the whole
+    # tokenize+shingle+array_distinct expression below any fan-out
+    # exchange into the scan filter (measured 2.4x on the whole query).
+    # A short doc's null set gives one null shingle, which the filter on
+    # the generator's output drops; nothing below the Generate refers to it.
     sets = toks.select(
         id_col,
-        F.array_distinct(word_ngrams(F.col("__toks"), n, hashed=True)).alias("__set"),
+        F.when(
+            F.size("__toks") >= n,
+            F.array_distinct(word_ngrams(F.col("__toks"), n, hashed=True)),
+        ).alias("__set"),
     )
-    sh = sets.select(
-        id_col, F.size("__set").alias("__sz"), F.explode_outer("__set").alias("shingle")
+    # One exchange on the shingle, explicit so that both join sides read
+    # it whichever join strategy is planned (a broadcast side would
+    # otherwise re-run the scan and the whole tokenize -> shingle map).
+    sh = (
+        sets.select(
+            id_col, F.size("__set").alias("__sz"), F.explode_outer("__set").alias("shingle")
+        )
+        .filter(F.col("shingle").isNotNull())
+        .repartition("shingle")
     )
+    a = sh.select("shingle", F.col(id_col).alias("id_a"), F.col("__sz").alias("sa"))
     if max_shingle_freq is not None:
         # one row per (doc, shingle), so the count is the doc frequency;
-        # the over-cap side stays broadcastable because boilerplate
-        # shingles are few (if they were many, the cap would be mis-set)
-        hot = (
-            sh.groupBy("shingle").count()
-            .filter(F.col("count") > max_shingle_freq)
-            .select("shingle")
-        )
-        sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    a = sh.select("shingle", F.col(id_col).alias("id_a"), F.col("__sz").alias("sa"))
+        # capped on the right side only, which a sort-merge join buffers
+        sh = sh.withColumn(
+            "__df", F.count(F.lit(1)).over(Window.partitionBy("shingle"))
+        ).filter(F.col("__df") <= max_shingle_freq)
     b = sh.select("shingle", F.col(id_col).alias("id_b"), F.col("__sz").alias("sb"))
-    sized_pairs = a.join(b, "shingle").filter(F.col("id_a") < F.col("id_b"))
+    # coalesce: a plain id_a < id_b would infer id-not-null filters, pushed
+    # below the exchange on the uncapped side only (the window blocks it
+    # on the other), and the two sides would stop sharing the exchange.
+    # A null id still never pairs, and still counts toward the cap.
+    sized_pairs = a.join(b, "shingle").filter(
+        F.coalesce(F.col("id_a") < F.col("id_b"), F.lit(False))
+    )
     # Size filter (the prefix-filter family's cheapest member, round 12):
     # jaccard = inter/(sa+sb-inter) is monotone-increasing in inter, and
     # inter <= min(sa, sb), so a pair's best achievable jaccard is

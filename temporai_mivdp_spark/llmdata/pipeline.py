@@ -280,14 +280,11 @@ def curation_gate(
         if merges is None
         else bpe_mod.merge_ranks(merges)
     )
-    quality = text_mod._quality_columns(F.col(text_col))
+    quality = text_mod._quality_columns(F.col(text_col), ("n_tokens", "punct_ratio"))
     rest = [c for c in docs.columns if c != id_col]
-    carried = [*rest, "n_tokens", "punct_ratio"]
+    carried = [*rest, *quality]
     feats = docs.filter(F.col(id_col).isNotNull()).select(
-        id_col,
-        *rest,
-        quality["n_tokens"].alias("n_tokens"),
-        quality["punct_ratio"].alias("punct_ratio"),
+        id_col, *rest, *[c.alias(name) for name, c in quality.items()]
     )
     lang = text_mod.language_id_ngram(
         feats, text_col=text_col, id_col=id_col, passthrough=carried

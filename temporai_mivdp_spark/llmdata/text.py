@@ -132,24 +132,25 @@ def _count_any_occurrence(text: Column, words: list[str]) -> Column:
     return F.regexp_count(normalize_text(text), F.lit(pat)).cast("long")
 
 
-def _quality_columns(t: Column) -> dict[str, Column]:
+def _quality_columns(t: Column, names: tuple[str, ...] | None = None) -> dict[str, Column]:
     """The ``quality_features`` expressions over the text column ``t``,
-    keyed by output name — shared with ``pipeline.curation_gate``, which
+    keyed by output name, for ``names`` (default: all six, in output
+    order). Only the named columns are built: ``pipeline.curation_gate``
     adds two of them to its input frame instead of joining the feature
-    frame back."""
+    frame back, and the stopword count alone is a second normalize tree."""
     n_chars = F.length(t)
     n_tokens = token_count(t)
-    stop_hits = _count_any_occurrence(t, STOPWORDS)
-    return {
-        "n_chars": n_chars,
-        "n_tokens": n_tokens,
-        "chars_per_token": n_chars / n_tokens,
+    build = {
+        "n_chars": lambda: n_chars,
+        "n_tokens": lambda: n_tokens,
+        "chars_per_token": lambda: n_chars / n_tokens,
         # count the kept class directly: same value as length(replace-all-
         # others-away) with no intermediate string per doc
-        "punct_ratio": F.regexp_count(t, F.lit(r"[.!?,;:]")) / n_chars,
-        "digit_ratio": F.regexp_count(t, F.lit(r"[0-9]")) / n_chars,
-        "stopword_ratio": stop_hits / n_tokens,
+        "punct_ratio": lambda: F.regexp_count(t, F.lit(r"[.!?,;:]")) / n_chars,
+        "digit_ratio": lambda: F.regexp_count(t, F.lit(r"[0-9]")) / n_chars,
+        "stopword_ratio": lambda: _count_any_occurrence(t, STOPWORDS) / n_tokens,
     }
+    return {name: build[name]() for name in names or build}
 
 
 def quality_features(

@@ -94,7 +94,12 @@ def fan_out(df: DataFrame, *keys: str) -> DataFrame:
     affects results — every catalog entry is partitioning-stable by
     construction (md5-deterministic sampling, commutative aggregates),
     pinned by tests.
+
+    A streaming frame is returned unchanged: it has no partition count
+    to read before it starts, and each micro-batch is planned on its own.
     """
+    if df.isStreaming:
+        return df
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     if df.rdd.getNumPartitions() * 2 > target:

@@ -853,6 +853,22 @@ def test_curation_gate_builds_without_a_job(spark, gate_docs):
     ]
 
 
+def test_quality_columns_builds_only_the_named_columns(spark):
+    """``curation_gate`` asks for two of the six quality columns; only
+    those are built, each the same expression as in the full set."""
+    from pyspark.sql import functions as F
+
+    t = F.col("text")
+    full = text._quality_columns(t)
+    assert list(full) == [
+        "n_chars", "n_tokens", "chars_per_token", "punct_ratio", "digit_ratio",
+        "stopword_ratio",
+    ]
+    two = text._quality_columns(t, ("n_tokens", "punct_ratio"))
+    assert list(two) == ["n_tokens", "punct_ratio"]
+    assert {k: str(c) for k, c in two.items()} == {k: str(full[k]) for k in two}
+
+
 def test_curation_gate_reads_its_input_at_most_four_times(spark, gate_docs):
     """No self-joins: the quality features ride on the input rows, so
     the executed plan scans the input for langid's grams and rows and

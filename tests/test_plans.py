@@ -310,3 +310,33 @@ def test_jaccard_set_build_is_row_local(spark):
                 "shingle-set expression leaked into a filter (inferred "
                 "generate filter pushed to the scan):\n" + line
             )
+
+
+@pytest.mark.parametrize("broadcast", [True, False], ids=["broadcast", "sort-merge"])
+def test_jaccard_tokenizes_once_per_execution(spark, tmp_path, broadcast):
+    """``ngram_jaccard_pairs`` runs its tokenize -> shingle map once per
+    execution: the executed plan holds one normalize regex, under the one
+    shingle exchange that both join sides and the doc-frequency cap read
+    (the second side is a ReusedExchange, which prints no subtree). The
+    corpus is read from parquet, so a short-doc filter pushed into the
+    scan's DataFilters would show up as a second regex."""
+    from temporai_mivdp_spark.llmdata import dedup
+
+    rows = [(i, f"click here now unique{i} tail{i} words{i}") for i in range(40)]
+    rows += [(100, "a b"), (101, None), (None, "orphan text with no id")]
+    path = str(tmp_path / "corpus.parquet")
+    spark.createDataFrame(rows, "doc_id: long, text: string").write.parquet(path)
+    docs = spark.read.parquet(path)
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    if not broadcast:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        pairs = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.0, max_shingle_freq=50)
+        assert len(pairs.collect()) == 40 * 39 // 2  # all through "click here now"
+        final = pairs._jdf.queryExecution().executedPlan().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    join = "BroadcastHashJoin" if broadcast else "SortMergeJoin"
+    assert join in final, final
+    assert final.count("regexp_replace(") == 1, final
+    assert final.count("ReusedExchange") == 1, final

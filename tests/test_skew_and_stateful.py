@@ -195,7 +195,7 @@ def _canon_pairs(df):
 
 def test_ngram_jaccard_prefilter_hot_same_output(spark):
     """The frequency cap is applied before the pairs are built (a
-    broadcast anti-join of the exactly counted over-cap shingles). The
+    window count over the shingle exchange drops over-cap shingles). The
     result must equal the plain-Python reference — same pairs, same
     jaccard values — on a corpus that mixes a stop-shingle (present in
     every doc) with real near-duplicate pairs that must survive."""
@@ -289,9 +289,100 @@ def test_ngram_jaccard_boilerplate_cap_matches_reference(spark):
     assert len(got) == 6, got
 
 
+def test_ngram_jaccard_cap_boundary_matches_reference(spark):
+    """The cap keeps a shingle whose doc frequency equals it and drops it
+    at one more doc. "alpha beta gamma" opens 6 docs and is their only
+    shared shingle: with cap 6 every pair of them survives, with cap 5
+    none does, and both equal the plain-Python reference."""
+    from temporai_mivdp_spark.llmdata import dedup
+
+    rows = [(i, f"alpha beta gamma u{i} v{i} w{i}") for i in range(6)]
+    # an unrelated near-dup pair whose shingles are all under any cap
+    rows += [(100, "one two three four five"), (101, "one two three four six")]
+    docs = spark.createDataFrame(rows, "doc_id: long, text: string")
+
+    at_cap = _canon_pairs(
+        dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.1, max_shingle_freq=6)
+    )
+    over_cap = _canon_pairs(
+        dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.1, max_shingle_freq=5)
+    )
+    assert at_cap == _jaccard_reference(rows, 3, 6, 0.1)
+    assert over_cap == _jaccard_reference(rows, 3, 5, 0.1)
+    assert len(at_cap) == 15 + 1, at_cap
+    assert over_cap == [(100, 101, 0.5)], over_cap
+
+    # a null-id doc never pairs but still counts toward the cap
+    with_null = docs.union(
+        spark.createDataFrame([(None, "alpha beta gamma q r s")], docs.schema)
+    )
+    for cap, want in ((6, over_cap), (7, at_cap)):
+        got = dedup.ngram_jaccard_pairs(
+            with_null, n=3, threshold=0.1, max_shingle_freq=cap
+        )
+        assert _canon_pairs(got) == want, cap
+
+
+def _stage_spill_bytes(spark, group, action):
+    """Run ``action()`` under job group ``group``; return the bytes its
+    stages spilled (memory plus disk)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group, False)
+    try:
+        out = action()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+        ids = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    store = sc._jsc.sc().statusStore()  # noqa: SLF001
+    spilled = 0
+    for j in ids:
+        for sid in sc.statusTracker().getJobInfo(j).stageIds:
+            try:
+                st = store.lastStageAttempt(sid)
+            except Exception:  # noqa: BLE001 - py4j NoSuchElementException
+                continue
+            spilled += st.memoryBytesSpilled() + st.diskBytesSpilled()
+    return out, spilled
+
+
+def test_ngram_jaccard_cap_window_spills_hot_key(spark):
+    """The cap's per-shingle window buffers one key's rows at a time. With
+    the buffer's in-memory and spill thresholds forced down to a few
+    rows, a boilerplate shingle in 60 docs (dropped, cap 40) and one in
+    30 docs (kept) both go through the spill path, and the pairs still
+    equal the plain-Python reference."""
+    from temporai_mivdp_spark.llmdata import dedup
+
+    rows = [(i, f"subscribe to our newsletter unique{i} tail{i}") for i in range(60)]
+    rows += [(100 + i, f"read more here unique{i} tail{i} words{i}") for i in range(30)]
+    docs = spark.createDataFrame(rows, "doc_id: long, text: string")
+    confs = {
+        "spark.sql.windowExec.buffer.in.memory.threshold": "2",
+        "spark.sql.windowExec.buffer.spill.threshold": "4",
+    }
+    prev = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        pairs = dedup.ngram_jaccard_pairs(
+            docs, n=3, threshold=0.0, max_shingle_freq=40
+        )
+        got, spilled = _stage_spill_bytes(
+            spark, "jaccard-cap-spill", lambda: _canon_pairs(pairs)
+        )
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    assert got == _jaccard_reference(rows, 3, 40, 0.0)
+    assert len(got) == 30 * 29 // 2, len(got)
+    assert spilled > 0, "the window buffer never spilled"
+
+
 def test_prefilter_hot_defaults_and_guards(spark):
-    """The jaccard cap's left-anti join is planned exactly when a cap is
-    set. LSH: prefilter_hot=None resolves to on-iff-cap-set (the plan
+    """The jaccard cap's doc-frequency window is planned exactly when a
+    cap is set. LSH: prefilter_hot=None resolves to on-iff-cap-set (the plan
     carries the detector's broadcast anti-join exactly when a cap
     exists), and the r11 silent no-op is now a loud ValueError."""
     import pytest
@@ -306,8 +397,9 @@ def test_prefilter_hot_defaults_and_guards(spark):
 
     with_cap = dedup.ngram_jaccard_pairs(docs, max_shingle_freq=5)
     no_cap = dedup.ngram_jaccard_pairs(docs, max_shingle_freq=None)
-    assert "LeftAnti" in plan(with_cap)
-    assert "LeftAnti" not in plan(no_cap)
+    cap_window = "count(1) windowspecdefinition(shingle"
+    assert plan(with_cap).count(cap_window) == 1, plan(with_cap)
+    assert cap_window not in plan(no_cap), plan(no_cap)
 
     lsh_cap = dedup.minhash_lsh_candidates(docs, 8, 4, max_bucket_size=5)
     lsh_none = dedup.minhash_lsh_candidates(docs, 8, 4)

@@ -274,3 +274,22 @@ def test_fan_out_adaptive(spark):
     a = sorted(r.doc_id for r in docs.collect())
     b = sorted(r.doc_id for r in fanned.collect())
     assert a == b
+
+
+def test_fan_out_streaming_frame_unchanged(spark):
+    """A streaming frame has no partition count before it starts: fan_out
+    returns it unchanged, still streaming, and launches no job."""
+    from temporai_mivdp_spark.sources import fan_out
+
+    stream = spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+    sc = spark.sparkContext
+    sc.setJobGroup("fan-out-stream", "fan_out on a stream", False)
+    try:
+        out = fan_out(stream, "value")
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+        jobs = sc.statusTracker().getJobIdsForGroup("fan-out-stream")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert out is stream and out.isStreaming
+    assert list(jobs) == []
